@@ -2,7 +2,7 @@
 decomposition: the Hodrick-Prescott filter (pentadiagonal linear
 solve), Sakoe-Chiba-banded dynamic time warping, and 2-state Viterbi
 decoding.  Each ships as a grouped Arrow kernel over the BOUNDED
-per-key daily/diel grid (the lz76/holtwinters posture) and is pinned
+per-key daily/diel grid (the holtwinters posture) and is pinned
 by tests/test_seqkernels.py against independent formulations
 (optimality residual for HP, full-DP and memoized recursion for DTW,
 exhaustive path enumeration for Viterbi).

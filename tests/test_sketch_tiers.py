@@ -275,6 +275,8 @@ def test_kll_canonical_fold_is_sequence_deterministic():
         for v in x:
             sk.update(float(v))
         sks.append((sk.n, sk._flips, [list(lv) for lv in sk.levels]))
+    # a twin that ties on (n, levels) and differs only in flips
+    sks.append((sks[0][0], sks[0][1] + 1, sks[0][2]))
     a = kll_canonical_fold(32, list(sks))
     b = kll_canonical_fold(32, list(reversed(sks)))
     # canonical ordering makes ONE fold call independent of input order

@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from diive_spark.queries_stats2 import _hourly
+from diive_spark.queries_trend import _hourly
 from diive_spark.streaming.records import stream_record_highs
 
 

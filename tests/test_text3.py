@@ -8,7 +8,7 @@ from collections import Counter
 
 import numpy as np
 
-from diive_spark.queries_stats2 import _OFF
+from diive_spark.queries_trend import _OFF
 from diive_spark.queries_text3 import (
     _JL_K,
     _JL_S,

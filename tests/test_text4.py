@@ -8,7 +8,7 @@ import hashlib
 import math
 from collections import Counter, defaultdict
 
-from diive_spark.queries_stats2 import _OFF
+from diive_spark.queries_trend import _OFF
 from diive_spark.queries_text4 import (
     _HILL_K,
     q_dedup_savings,

@@ -79,7 +79,7 @@ def build_table() -> str:
         "",
         "### Registry coverage table (generated — do not edit by hand)",
         "",
-        f"Round-5 totals: **{n_total} registry queries ({n_oracle} "
+        f"Totals: **{n_total} registry queries ({n_oracle} "
         f"oracle-backed + {n_total - n_oracle}",
         "rows-only kernels)** (pinned by `tests/test_registry_totals.py`;",
         "regenerate with `python tools/coverage_table.py`).",
