@@ -12,6 +12,12 @@ recomputes everything per run; this engine is INCREMENTAL:
     order yields identical tables (exactness preserved: mean = psum/pcount
     recomposed after merge, min-count gate re-evaluated over merged counts
     at read time, exactly like the reference re-running resample).
+  * One partial pass per batch, shared across tiers (the sub-aggregate
+    sharing of *Factor Windows*, ICDE 2022): the finest tier's partials are
+    computed once, and each coarser nested tier's delta is those rows
+    relabelled to its own window, summed by the merge. One Spark action
+    finds every tier's affected days; staged row counts and the watermark
+    come from the staged files' parquet footers.
   * Storage is a partitioned columnar table (parquet in the sandbox; the
     layout — partition by (tier, window_day) — and the snapshot/lineage
     manifest mirror Iceberg semantics: in production the same operations
@@ -35,13 +41,47 @@ import uuid
 from dataclasses import asdict
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from diive_spark.config import TierSpec
 from diive_spark.operators.sanitize import ts_shift
 
 PARTIALS = ["psum", "pcount", "pslots"]
+
+
+def _window_day(window_end_s) -> Column:
+    """The ``window_day`` partition of a window ending at ``window_end_s``
+    (the day holding the window's last instant)."""
+    return F.date_format(F.timestamp_seconds(window_end_s - 1), "yyyy-MM-dd")
+
+
+def _relabel(base: TierSpec, tier: TierSpec) -> Column:
+    """``tier``'s window end for a row of ``base`` partials, exact in
+    integers when ``tier.seconds`` is a multiple of ``base.seconds``: the
+    base window ``(e - b, e]`` lies in the tier window that holds its start
+    ``e - b``."""
+    start = F.col("window_end_s") - base.seconds
+    return start - F.pmod(start, F.lit(tier.seconds)) + tier.seconds
+
+
+def _footer_stats(staging: Path) -> tuple[dict[str, int], int | None]:
+    """Per-day row counts and the max ``window_end_s`` of a staged write,
+    read from the parquet footers (no Spark job)."""
+    counts: dict[str, int] = {}
+    watermark = None
+    for f in sorted(staging.glob("window_day=*/*.parquet")):
+        day = f.parent.name.split("=", 1)[1]
+        meta = pq.read_metadata(f)
+        counts[day] = counts.get(day, 0) + meta.num_rows
+        paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+        j = paths.index("window_end_s")
+        for i in range(meta.num_row_groups):
+            stats = meta.row_group(i).column(j).statistics
+            if stats is not None and stats.has_min_max:
+                watermark = stats.max if watermark is None else max(watermark, stats.max)
+    return counts, watermark
 
 
 class SumCountPartials:
@@ -141,15 +181,6 @@ class TierStore:
         tmp.write_text(json.dumps(manifest, indent=1))
         os.replace(tmp, self.manifest_path)  # atomic
 
-    def applied_batches(self) -> set[str]:
-        return {s["batch_id"] for s in self.read_manifest()["snapshots"]}
-
-    def pending_intent(self, batch_id: str) -> dict | None:
-        for p in self.read_manifest().get("pending", []):
-            if p["batch_id"] == batch_id:
-                return p
-        return None
-
     # -- data --------------------------------------------------------------
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not self.data_dir.exists() or not any(self.data_dir.iterdir()):
@@ -227,177 +258,237 @@ class TierEngine:
             agg = base.groupBy(self.key_col, "window_end_s").agg(
                 *self.partials.partial_exprs(self.value_col, "_ts_s")
             )
-        return agg.withColumn(
-            "window_day",
-            F.date_format(
-                F.timestamp_seconds(F.col("window_end_s") - 1), "yyyy-MM-dd"
-            ),
-        )
+        return agg.withColumn("window_day", _window_day(F.col("window_end_s")))
 
     # -- incremental apply ----------------------------------------------------
     def apply_batch(self, source: DataFrame, batch_id: str | None = None) -> dict:
-        """MERGE one source batch into every tier — PARTITION-SCOPED.
+        """MERGE one source batch into every tier — PARTITION-SCOPED, with
+        the Spark work shared across tiers.
 
         Only the batch's ``affected_days`` partitions are merged, staged
         and swapped; untouched ``window_day=`` directories stay in place
-        on disk (the round-1 engine rewrote the WHOLE table per batch —
-        a full-table rewrite per ingest tick at 100×, VERDICT r1 "What's
-        wrong #2").  Iceberg analog: ``MERGE INTO`` with dynamic
-        partition overwrite.
+        on disk.  Iceberg analog: ``MERGE INTO`` with dynamic partition
+        overwrite.
 
-        Crash-safe + idempotent via an intent log:
+        Each tier's manifest is read once and decides that tier's mode:
+        *skip* (batch_id already in ``snapshots``), *replay* (batch_id in
+        ``pending``) or *fresh*.  For the fresh tiers:
 
-        1. merge only ``window_day ∈ affected_days`` with the delta and
-           stage the result (partition pruning limits the read to those
-           directories);
-        2. record a ``pending`` intent (batch_id, days, staging dir) in
-           the manifest;
+        * one partial pass: ``_partials(source, base)`` with ``base`` the
+          finest fresh tier, persisted for the batch and released on exit.
+          A coarser tier whose width is a multiple of ``base``'s takes the
+          base rows relabelled to its own ``window_end_s``/``window_day``
+          as its delta; the merge ``groupBy`` sums them.  Widths nest and
+          the END→MIDDLE shift precedes bucketing, so every base window
+          lies in exactly one coarse window: counts stay exact, sums
+          change only in float association.  A width that does not nest,
+          and a kernel spec (``partial_frame``), computes its delta from
+          the source through ``_partials`` instead;
+        * one Spark action (a ``collect_set`` per tier over the base
+          partials) yields every nested tier's affected days;
+        * live days are read with the delta's schema (no inference job)
+          and repartitioned by (day, key) before the merge, so one
+          exchange serves both the merge and the day-partitioned write;
+        * staged row counts and the watermark come from the staged
+          files' parquet footers, not from a Spark read-back.
+
+        Crash-safe + idempotent via an intent log, per tier:
+
+        1. stage the merged affected days;
+        2. record a ``pending`` intent (batch_id, days, staged counts,
+           watermark) in the manifest;
         3. swap each staged day directory into the live table;
         4. commit the snapshot record and clear the intent.
 
-        Resume semantics: a batch_id in ``snapshots`` is skipped; a
-        batch_id in ``pending`` means the merged result is already fully
-        staged (staging completes before the intent is recorded), so the
-        remaining swaps are replayed FROM STAGING without recomputing —
-        recomputing would re-read already-swapped days and double-merge
-        the delta.  A staging dir with no intent record is a pre-intent
-        crash leftover: discarded and recomputed from unchanged live
-        data.
+        A replayed tier finishes its swaps FROM STAGING without
+        recomputing — recomputing would re-read already-swapped days and
+        double-merge the delta.  A staging dir with no intent record is a
+        pre-intent crash leftover: discarded and recomputed from unchanged
+        live data.
         """
         batch_id = batch_id or uuid.uuid4().hex
         metrics: dict[str, dict] = {}
+        manifests: dict[str, dict] = {}
+        intents: dict[str, dict | None] = {}
         for tier in self.tiers:
-            store = self.stores[tier.name]
-            if batch_id in store.applied_batches():
+            manifest = self.stores[tier.name].read_manifest()
+            if any(s["batch_id"] == batch_id for s in manifest["snapshots"]):
                 metrics[tier.name] = {"skipped": True}
                 continue
-            staging = store.root / f"_staging_{batch_id}"
-            intent = store.pending_intent(batch_id)
-            if intent is None:
-                if staging.exists():  # pre-intent crash leftover
-                    shutil.rmtree(staging)
-                delta = self._partials(source, tier)
-                affected_days = sorted(
-                    r[0] for r in delta.select("window_day").distinct().collect()
-                )
-                # read ONLY the touched day directories — explicit paths, so
-                # pruning cannot be defeated by the date->string cast
-                live_paths = [
-                    str(store.data_dir / f"window_day={d}")
-                    for d in affected_days
-                    if (store.data_dir / f"window_day={d}").exists()
-                ]
-                if live_paths:
-                    touch = (
-                        self.spark.read.option("basePath", str(store.data_dir))
-                        .parquet(*live_paths)
-                        .withColumn("window_day", F.col("window_day").cast("string"))
+            manifests[tier.name] = manifest
+            intents[tier.name] = next(
+                (p for p in manifest.get("pending", []) if p["batch_id"] == batch_id),
+                None,
+            )
+        fresh = [t for t in self.tiers if t.name in intents and intents[t.name] is None]
+        base = None
+        try:
+            if fresh:
+                base_tier = min(fresh, key=lambda t: t.seconds)
+                base = self._partials(source, base_tier).persist()
+                deltas, days = self._shared_deltas(source, base, base_tier, fresh)
+            for tier in self.tiers:
+                if tier.name not in manifests:
+                    continue
+                store, manifest = self.stores[tier.name], manifests[tier.name]
+                intent = intents[tier.name]
+                if intent is None:
+                    staging = store.root / f"_staging_{batch_id}"
+                    if staging.exists():  # pre-intent crash leftover
+                        shutil.rmtree(staging)
+                    delta, regroup = deltas[tier.name]
+                    staged_counts, watermark = self._stage(
+                        store, delta, regroup, days[tier.name], staging
                     )
-                    both = touch.unionByName(delta)
-                    if hasattr(self.partials, "merge_frame"):
-                        merged_touch = self.partials.merge_frame(
-                            both,
-                            [self.key_col, "window_end_s", "window_day"],
-                        )
-                    else:
-                        merged_touch = both.groupBy(
-                            self.key_col, "window_end_s", "window_day"
-                        ).agg(*self.partials.merge_exprs())
-                else:
-                    merged_touch = delta
-                (
-                    # repartition on (day, key), not day alone: one-column
-                    # partitioning would funnel a whole day — billions of
-                    # rows at crawl scale — into a single task and a single
-                    # giant file; hashing the key in keeps day writes
-                    # parallel (the writer still splits per-day directories
-                    # via partitionBy). Cold days re-coalesce via compact().
-                    merged_touch.repartition(F.col("window_day"), F.col(self.key_col))
-                    .write.mode("overwrite")
-                    .partitionBy("window_day")
-                    .parquet(str(staging))
-                )
-                staged = (
-                    self.spark.read.parquet(str(staging))
-                    .withColumn("window_day", F.col("window_day").cast("string"))
-                    .groupBy("window_day")
-                    .agg(
-                        F.count(F.lit(1)).alias("cnt"),
-                        F.max("window_end_s").alias("wm"),
-                    )
-                    .collect()
-                )
-                staged_counts = {str(r["window_day"]): r["cnt"] for r in staged}
-                watermark = max((r["wm"] for r in staged), default=None)
-                manifest = store.read_manifest()
-                manifest.setdefault("pending", []).append(
-                    {
+                    intent = {
                         "batch_id": batch_id,
-                        "affected_days": affected_days,
+                        "affected_days": days[tier.name],
                         "staged_rows": staged_counts,
                         "watermark_s": watermark,
                     }
-                )
-                store.write_manifest(manifest)
-            else:
-                affected_days = intent["affected_days"]
-                staged_counts = intent["staged_rows"]
-                watermark = intent.get("watermark_s")
-            # swap staged day dirs into the live table (idempotent replay:
-            # a day missing from staging was already swapped)
-            store.data_dir.mkdir(parents=True, exist_ok=True)
-            for day in affected_days:
-                staged_day = staging / f"window_day={day}"
-                trash = store.root / f"_trash_{batch_id}_{day}"
-                if not staged_day.exists():
-                    # already swapped on a previous (crashed) attempt — the
-                    # crash may have landed between the two os.replace calls,
-                    # leaving this day's trash dir orphaned (ADVICE r2 low #3)
-                    if trash.exists():
-                        shutil.rmtree(trash)
-                    continue
-                live_day = store.data_dir / f"window_day={day}"
-                if live_day.exists():
-                    os.replace(live_day, trash)
-                os.replace(staged_day, live_day)
-                if trash.exists():
-                    shutil.rmtree(trash)
-            # sweep any stragglers for this batch (e.g. a day later dropped
-            # from affected_days) so trash never accumulates across
-            # crash-resume cycles
-            for orphan in store.root.glob(f"_trash_{batch_id}_*"):
-                shutil.rmtree(orphan, ignore_errors=True)
-            shutil.rmtree(staging, ignore_errors=True)
-            # commit: fold staged per-day counts into the previous
-            # snapshot's partition_rows (untouched partitions not re-read)
-            manifest = store.read_manifest()
-            prev = manifest["snapshots"][-1]["partition_rows"] if manifest["snapshots"] else {}
-            part_counts = {**prev, **staged_counts}
-            live_days = set(store.partitions())
-            part_counts = {d: c for d, c in part_counts.items() if d in live_days}
-            snap = {
-                "batch_id": batch_id,
-                "snapshot_id": uuid.uuid4().hex,
-                "committed_at": time.time(),
-                "rows": sum(part_counts.values()),
-                "partition_rows": part_counts,
-                "merged_partitions": affected_days,
-                # high-water mark of merged window ends — the "resume
-                # reading the source from here" cursor the docstring
-                # promises (Iceberg analog: a snapshot summary property)
-                "watermark_s": watermark,
-            }
-            manifest["snapshots"].append(snap)
-            manifest["pending"] = [
-                p for p in manifest.get("pending", []) if p["batch_id"] != batch_id
-            ]
-            store.write_manifest(manifest)
-            metrics[tier.name] = {
-                "rows": snap["rows"],
-                "partitions": len(part_counts),
-                "merged_partitions": len(affected_days),
-            }
+                    manifest.setdefault("pending", []).append(intent)
+                    store.write_manifest(manifest)
+                self._swap_days(store, batch_id, intent["affected_days"])
+                metrics[tier.name] = self._commit(store, manifest, intent)
+        finally:
+            if base is not None:
+                base.unpersist()
         return metrics
+
+    def _shared_deltas(
+        self, source: DataFrame, base: DataFrame, base_tier: TierSpec, fresh: list
+    ) -> tuple[dict, dict]:
+        """Per fresh tier: ``(delta, regroup)`` and its sorted affected days.
+
+        ``regroup`` marks a relabelled delta, which holds several rows per
+        (key, window) and so needs the merge ``groupBy`` even when no live
+        day is touched."""
+        nested = [t for t in fresh if t.seconds % base_tier.seconds == 0]
+        kernel = hasattr(self.partials, "partial_frame")
+        deltas, days = {}, {}
+        for tier in fresh:
+            if tier is base_tier:
+                deltas[tier.name] = (base, False)
+            elif tier in nested and not kernel:
+                wend = _relabel(base_tier, tier)
+                deltas[tier.name] = (
+                    base.withColumn("window_end_s", wend).withColumn(
+                        "window_day", _window_day(wend)
+                    ),
+                    True,
+                )
+            else:
+                delta = self._partials(source, tier)
+                deltas[tier.name] = (delta, False)
+                if tier not in nested:
+                    days[tier.name] = sorted(
+                        r[0] for r in delta.select("window_day").distinct().collect()
+                    )
+        row = base.agg(
+            *[F.collect_set(_window_day(_relabel(base_tier, t))) for t in nested]
+        ).first()
+        days.update({t.name: sorted(row[i]) for i, t in enumerate(nested)})
+        return deltas, days
+
+    def _stage(
+        self,
+        store: TierStore,
+        delta: DataFrame,
+        regroup: bool,
+        affected_days: list[str],
+        staging: Path,
+    ) -> tuple[dict[str, int], int | None]:
+        """Merge ``delta`` into the live ``affected_days`` and write the
+        result to ``staging``; returns the staged per-day row counts and
+        the max ``window_end_s``, both read from the parquet footers."""
+        # read ONLY the touched day directories — explicit paths, so
+        # pruning cannot be defeated by the date->string cast
+        live_paths = [
+            str(store.data_dir / f"window_day={d}")
+            for d in affected_days
+            if (store.data_dir / f"window_day={d}").exists()
+        ]
+        frame = delta
+        if live_paths:
+            touch = (
+                self.spark.read.schema(delta.schema)
+                .option("basePath", str(store.data_dir))
+                .parquet(*live_paths)
+            )
+            frame = touch.unionByName(delta)
+        # repartition on (day, key), not day alone: one-column partitioning
+        # would funnel a whole day into a single task and a single giant
+        # file; hashing the key in keeps day writes parallel (the writer
+        # still splits per-day directories via partitionBy; cold days
+        # re-coalesce via compact()).  The merge below groups by a superset
+        # of these columns, so this one exchange serves it too.
+        frame = frame.repartition(F.col("window_day"), F.col(self.key_col))
+        if live_paths or regroup:
+            group = [self.key_col, "window_end_s", "window_day"]
+            if hasattr(self.partials, "merge_frame"):
+                frame = self.partials.merge_frame(frame, group)
+            else:
+                frame = frame.groupBy(*group).agg(*self.partials.merge_exprs())
+        frame.write.mode("overwrite").partitionBy("window_day").parquet(str(staging))
+        return _footer_stats(staging)
+
+    def _commit(self, store: TierStore, manifest: dict, intent: dict) -> dict:
+        """Append the snapshot record for a swapped intent and clear it:
+        staged per-day counts fold into the previous snapshot's
+        partition_rows (untouched partitions are not re-read)."""
+        batch_id, affected_days = intent["batch_id"], intent["affected_days"]
+        prev = manifest["snapshots"][-1]["partition_rows"] if manifest["snapshots"] else {}
+        part_counts = {**prev, **intent["staged_rows"]}
+        live_days = set(store.partitions())
+        part_counts = {d: c for d, c in part_counts.items() if d in live_days}
+        snap = {
+            "batch_id": batch_id,
+            "snapshot_id": uuid.uuid4().hex,
+            "committed_at": time.time(),
+            "rows": sum(part_counts.values()),
+            "partition_rows": part_counts,
+            "merged_partitions": affected_days,
+            # high-water mark of merged window ends — the "resume reading
+            # the source from here" cursor (Iceberg analog: a snapshot
+            # summary property)
+            "watermark_s": intent.get("watermark_s"),
+        }
+        manifest["snapshots"].append(snap)
+        manifest["pending"] = [
+            p for p in manifest.get("pending", []) if p["batch_id"] != batch_id
+        ]
+        store.write_manifest(manifest)
+        return {
+            "rows": snap["rows"],
+            "partitions": len(part_counts),
+            "merged_partitions": len(affected_days),
+        }
+
+    @staticmethod
+    def _swap_days(store: TierStore, tag: str, days: list[str]) -> None:
+        """Swap ``_staging_<tag>``'s day dirs into the live table
+        (live→trash→staged per day), then drop staging and trash.
+
+        Idempotent replay: a day missing from staging was already swapped
+        on a previous (crashed) attempt; the crash may have landed between
+        the two ``os.replace`` calls, leaving that day's trash orphaned,
+        so every ``_trash_<tag>_*`` is swept at the end."""
+        staging = store.root / f"_staging_{tag}"
+        store.data_dir.mkdir(parents=True, exist_ok=True)
+        for day in days:
+            staged_day = staging / f"window_day={day}"
+            if not staged_day.exists():
+                continue
+            live_day = store.data_dir / f"window_day={day}"
+            trash = store.root / f"_trash_{tag}_{day}"
+            if live_day.exists():
+                os.replace(live_day, trash)
+            os.replace(staged_day, live_day)
+            if trash.exists():
+                shutil.rmtree(trash)
+        for orphan in store.root.glob(f"_trash_{tag}_*"):
+            shutil.rmtree(orphan, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
 
     # -- reads -----------------------------------------------------------------
     def read_tier(
@@ -497,23 +588,7 @@ class TierEngine:
     def _swap_compaction(self, store: TierStore, intent: dict) -> None:
         """Swap a fully-staged compaction into the live table and commit."""
         compact_id, days = intent["compact_id"], intent["days"]
-        staging = store.root / f"_staging_compact_{compact_id}"
-        for day in days:
-            staged_day = staging / f"window_day={day}"
-            trash = store.root / f"_trash_compact_{compact_id}_{day}"
-            if not staged_day.exists():  # already swapped pre-crash
-                if trash.exists():
-                    shutil.rmtree(trash)
-                continue
-            live_day = store.data_dir / f"window_day={day}"
-            if live_day.exists():
-                os.replace(live_day, trash)
-            os.replace(staged_day, live_day)
-            if trash.exists():
-                shutil.rmtree(trash)
-        for orphan in store.root.glob(f"_trash_compact_{compact_id}_*"):
-            shutil.rmtree(orphan, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
+        self._swap_days(store, f"compact_{compact_id}", days)
         manifest = store.read_manifest()
         manifest.setdefault("compactions", []).append(
             {"at": time.time(), "compact_id": compact_id, "partitions": days}

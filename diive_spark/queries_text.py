@@ -45,7 +45,7 @@ def _scan_parallel(df: DataFrame) -> DataFrame:
     stand-in for that natural split fan-out.
     """
     spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n)
 
 

@@ -11,8 +11,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def get_spark(
     master: str | None = None,
@@ -24,15 +22,13 @@ def get_spark(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` in the sandbox; on a
     real cluster the caller leaves it unset and ``spark-submit`` provides it.
+    ``shuffle_partitions`` defaults to the context's default parallelism
+    (one partition per core on a local master).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -53,6 +49,10 @@ def get_spark(
     spark.sparkContext.setLogLevel("ERROR")
     # queries may run under a driver-provided session: enforce runtime confs
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions or spark.sparkContext.defaultParallelism),
+    )
     return spark
 
 
@@ -79,5 +79,5 @@ def kernel_partition(df, *cols):
     instead of the byte estimate.
     """
     spark = df.sparkSession
-    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return df.repartition(n, *cols)

@@ -161,6 +161,40 @@ def _vec_df(spark, n_keys=2, n_per_key=600, d=8):
     )
 
 
+def test_kll_multi_tier_matches_single_tier_engines(spark, tmp_path):
+    """A kernel spec computes every tier's delta from the source, while a
+    coarser tier's affected days come from the finest tier's partials: a
+    1h+1d engine holds bit-equal states to two single-tier engines."""
+    df = _series_df(spark)
+    tiers = (
+        TierSpec("1h", "1 hour", 3600, mincounts_perc=0.0),
+        TierSpec("1d", "1 day", 86400, mincounts_perc=0.0),
+    )
+    engines = [
+        TierEngine(
+            spark, str(tmp_path / name), ts, "key", "ts", "value",
+            partials=KLLPartials(k=64),
+        )
+        for name, ts in (("both", tiers), ("1h", tiers[:1]), ("1d", tiers[1:]))
+    ]
+    for i, b in enumerate(_batches(df)):
+        for eng in engines:
+            eng.apply_batch(b, batch_id=f"kb{i}")
+
+    def state(eng, name):
+        return sorted(
+            (r.key, r.window_end_s, r.kll_n, r.kll_flips, json.dumps(r.kll_levels))
+            for r in eng.stores[name].read(spark).collect()
+        )
+
+    both, single_1h, single_1d = engines
+    assert state(both, "1h") == state(single_1h, "1h")
+    assert state(both, "1d") == state(single_1d, "1d")
+    assert both.stores["1d"].read_manifest()["snapshots"][-1][
+        "partition_rows"
+    ] == single_1d.stores["1d"].read_manifest()["snapshots"][-1]["partition_rows"]
+
+
 def test_fd_partials_through_tier_engine(spark, tmp_path):
     df = _vec_df(spark)
     ell = 6

@@ -33,36 +33,156 @@ def gated_pdf(df):
     )
 
 
-def test_incremental_equals_full(spark, series_sdf, tmp_path):
-    # full recompute via the one-shot operator
+def oneshot_pdf(src, tier):
+    """One-shot ``resample_gated`` of ``src`` at ``tier``, shaped like
+    ``read_tier``."""
     import pyspark.sql.functions as F
 
-    full = resample_gated(
-        series_sdf, "url", "ts", "value", 3600, 0.9, source_freq_seconds=600
-    ).select(
-        "url",
-        (F.unix_micros(F.col("window_end").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("us"),
-        "agg_mean",
-        "agg_sum",
-        "n_vals",
+    return gated_pdf(
+        resample_gated(
+            src, "url", "ts", "value", tier.seconds, tier.mincounts_perc,
+            source_freq_seconds=600,
+        ).select(
+            "url",
+            (F.unix_micros(F.col("window_end").cast("timestamp")) / 1_000_000)
+            .cast("long")
+            .alias("window_end_s"),
+            "agg_mean",
+            "agg_sum",
+            "n_vals",
+        )
     )
-    want = full.toPandas().sort_values(["url", "us"]).reset_index(drop=True)
 
-    # incremental: 3 arbitrary batches (split by hash — out of time order)
+
+def assert_tiers_equal_oneshot(eng, src):
+    for tier in eng.tiers:
+        got = gated_pdf(eng.read_tier(tier.name))
+        want = oneshot_pdf(src, tier)
+        assert len(got) == len(want) > 0, tier.name
+        np.testing.assert_array_equal(got["n_vals"].values, want["n_vals"].values)
+        np.testing.assert_allclose(
+            got["agg_mean"].values, want["agg_mean"].values, rtol=1e-12
+        )
+        np.testing.assert_array_equal(
+            got["window_end_s"].values, want["window_end_s"].values
+        )
+
+
+def apply_out_of_order(eng, sdf):
+    """3 arbitrary batches (split by hash — out of time order), then the
+    late rows of the first day, whose partitions are already live; returns
+    the late batch's metrics."""
+    import pyspark.sql.functions as F
+
+    first_day = sdf.agg(F.min(F.to_date("ts"))).first()[0]
+    is_late = (F.to_date("ts") == F.lit(first_day)) & (
+        F.pmod(F.xxhash64("ts", "url"), 4) == 0
+    )
+    on_time = sdf.filter(~is_late)
+    for i in range(3):
+        batch = on_time.filter(F.pmod(F.xxhash64("url", "ts"), 3) == i)
+        eng.apply_batch(batch, batch_id=f"b{i}")
+    return eng.apply_batch(sdf.filter(is_late), batch_id="late")
+
+
+def test_incremental_equals_full(spark, series_sdf, tmp_path):
+    """Every tier of the nested 30m/1h/1d cascade — 1h and 1d merge
+    relabelled 30m partials — equals a one-shot rollup after out-of-order
+    batches and a late batch that lands in an already-merged day."""
     eng = TierEngine(
         spark, str(tmp_path / "tiers"), TIERS, "url", "ts", "value",
         source_freq_seconds=600,
     )
-    for i in range(3):
-        batch = series_sdf.filter(F.pmod(F.xxhash64("url", "ts"), 3) == i)
-        eng.apply_batch(batch, batch_id=f"b{i}")
-    got = gated_pdf(eng.read_tier("1h"))
-    assert len(got) == len(want)
-    np.testing.assert_array_equal(got["n_vals"].values, want["n_vals"].values)
-    np.testing.assert_allclose(got["agg_mean"].values, want["agg_mean"].values, rtol=1e-12)
-    np.testing.assert_array_equal(got["window_end_s"].values, want["us"].values)
+    m = apply_out_of_order(eng, series_sdf)
+    assert m["1d"]["merged_partitions"] == 1
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+def test_incremental_equals_full_width_not_nested(spark, series_sdf, tmp_path):
+    """A tier whose width is not a multiple of the finest tier's (45m over
+    30m) takes its delta and affected days from the source; 1d still
+    relabels the 30m partials."""
+    tiers = (TIERS[0], TierSpec("45m", "45 minutes", 2700, mincounts_perc=0.9), TIERS[2])
+    eng = TierEngine(
+        spark, str(tmp_path / "tiers"), tiers, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    apply_out_of_order(eng, series_sdf)
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+def test_resume_after_finest_tier_committed(spark, series_sdf, tmp_path, monkeypatch):
+    """Crash after the finest tier committed a batch and before the coarser
+    tiers started: re-applying it leaves 30m untouched (no double merge)
+    and builds 1h and 1d from one partial pass at 1h, the finest tier
+    still fresh."""
+    import pyspark.sql.functions as F
+
+    root = str(tmp_path / "t8")
+    eng = TierEngine(
+        spark, root, TIERS, "url", "ts", "value", source_freq_seconds=600
+    )
+    half = F.pmod(F.xxhash64("url", "ts"), 2)
+    eng.apply_batch(series_sdf.filter(half == 0), batch_id="a")
+    b = series_sdf.filter(half == 1)
+    # crash state: batch b committed in 30m only
+    TierEngine(
+        spark, root, TIERS[:1], "url", "ts", "value", source_freq_seconds=600
+    ).apply_batch(b, batch_id="b")
+    store = eng.stores["30m"]
+    days = store.partitions()
+    files_before = {d: _partition_file_stats(store.data_dir, d) for d in days}
+    manifest_before = store.read_manifest()
+    assert [s["batch_id"] for s in eng.stores["1h"].read_manifest()["snapshots"]] == ["a"]
+
+    calls = []
+    partials = eng._partials
+
+    def spy(df, tier):
+        calls.append(tier.name)
+        return partials(df, tier)
+
+    monkeypatch.setattr(eng, "_partials", spy)
+    m = eng.apply_batch(b, batch_id="b")
+    assert m["30m"] == {"skipped": True}
+    assert calls == ["1h"]
+    assert store.partitions() == days
+    assert {d: _partition_file_stats(store.data_dir, d) for d in days} == files_before
+    assert store.read_manifest() == manifest_before
+    for name in ("1h", "1d"):
+        man = eng.stores[name].read_manifest()
+        assert [s["batch_id"] for s in man["snapshots"]] == ["a", "b"]
+        assert man["pending"] == []
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+def test_apply_batch_plan_shape(spark, series_sdf, tmp_path):
+    """A 3-tier batch into live days shares its Spark work across tiers —
+    one partial pass, one affected-days action, one exchange per tier's
+    merge, footer-read staged counts: at most 15 jobs (30 when every tier
+    ran its own partials, day list and staged read-back) — and releases
+    every RDD it persisted."""
+    import pyspark.sql.functions as F
+
+    eng = TierEngine(
+        spark, str(tmp_path / "t9"), TIERS, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    half = F.pmod(F.xxhash64("url", "ts"), 2)
+    eng.apply_batch(series_sdf.filter(half == 0), batch_id="a")
+    sc = spark.sparkContext
+    persisted = set(sc._jsc.getPersistentRDDs().keys())
+    group = "test-apply-batch-plan-shape"
+    sc.setJobGroup(group, "3-tier apply_batch into live days")
+    try:
+        m = eng.apply_batch(series_sdf.filter(half == 1), batch_id="b")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert all(m[t.name]["merged_partitions"] > 0 for t in TIERS)
+    assert 0 < len(jobs) <= 15, len(jobs)
+    assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
 
 
 def test_idempotent_reapply(spark, series_sdf, tmp_path):
@@ -251,8 +371,6 @@ def test_streaming_late_data_converges(spark, series_sdf, tmp_path):
     EARLIEST timestamps (true late arrivals re-touching already-merged
     windows); the streamed tier must equal a one-shot batch rebuild, at
     every tier, gates included."""
-    import pyspark.sql.functions as F
-
     # file-ordered source: newest timestamps first, oldest (late) last —
     # maxFilesPerTrigger=1 makes each file one micro-batch in name order
     src = tmp_path / "late_src"
@@ -283,27 +401,7 @@ def test_streaming_late_data_converges(spark, series_sdf, tmp_path):
     )
     q.awaitTermination(180)
 
-    for tier in TIERS:
-        got = gated_pdf(engine.read_tier(tier.name))
-        want = gated_pdf(
-            resample_gated(
-                series_sdf, "url", "ts", "value", tier.seconds,
-                tier.mincounts_perc, source_freq_seconds=600,
-            ).select(
-                "url",
-                (F.unix_micros(F.col("window_end").cast("timestamp")) / 1_000_000)
-                .cast("long")
-                .alias("window_end_s"),
-                "agg_mean",
-                "agg_sum",
-                "n_vals",
-            )
-        )
-        assert len(got) == len(want) > 0, tier.name
-        np.testing.assert_array_equal(got["n_vals"].values, want["n_vals"].values)
-        np.testing.assert_allclose(
-            got["agg_mean"].values, want["agg_mean"].values, rtol=1e-12
-        )
+    assert_tiers_equal_oneshot(engine, series_sdf)
 
 
 def test_compaction_preserves_content_and_shrinks_files(spark, series_sdf, tmp_path):
@@ -396,7 +494,9 @@ def test_compaction_crash_resume_replays_pending(spark, series_sdf, tmp_path):
 def test_m4_partials_through_tier_engine(spark, tmp_path):
     """The pluggable-partials engine runs M4 tuples through the SAME
     incremental MERGE / lineage / idempotent-resume machinery: out-of-order
-    batches == one-shot m4_downsample, and a re-applied batch is a no-op."""
+    batches == one-shot m4_downsample bit-exactly, also for a tier built
+    from a finer tier's relabelled partials, and a re-applied batch is a
+    no-op."""
     from pyspark.sql import functions as F
 
     from diive_spark.operators.downsample import m4_downsample
@@ -407,9 +507,13 @@ def test_m4_partials_through_tier_engine(spark, tmp_path):
         spark, n_urls=25, n_records=2500, freq_seconds=60, zipf_hot_fraction=0.05
     ).select("url", "ts", "value").filter(F.col("value").isNotNull())
 
+    # the 10m tier is the partial pass; 1h merges its relabelled tuples
     eng = TierEngine(
         spark, str(tmp_path / "m4tiers"),
-        (TierSpec("1h", "1 hour", 3600, mincounts_perc=0.0),),
+        (
+            TierSpec("10m", "10 minutes", 600, mincounts_perc=0.0),
+            TierSpec("1h", "1 hour", 3600, mincounts_perc=0.0),
+        ),
         "url", "ts", "value", partials=M4Partials(),
     )
     for i in range(3):
@@ -441,4 +545,4 @@ def test_m4_partials_through_tier_engine(spark, tmp_path):
     assert want.exceptAll(got).count() == 0
     # idempotent resume: re-applying a recorded batch is a no-op
     m = eng.apply_batch(pages.limit(50), batch_id="m4b1")
-    assert m["1h"] == {"skipped": True}
+    assert m == {"10m": {"skipped": True}, "1h": {"skipped": True}}
