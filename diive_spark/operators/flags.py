@@ -147,15 +147,8 @@ def add_qcf(
       null otherwise (unreachable for integer flags).
     ``value_qcf`` nulls QCF==2 records; ``value_qcf0`` keeps QCF==0 only.
     """
-    hard = _sum_where(flag_cols, 2)
-    soft = _sum_where(flag_cols, 1)
-    hard_col = f"sum_hardflags{suffix}"
-    soft_col = f"sum_softflags{suffix}"
-    out = (
-        df.withColumn(hard_col, hard.cast("int"))
-        .withColumn(soft_col, soft.cast("int"))
-    )
-    h, s = F.col(hard_col), F.col(soft_col)
+    h = _sum_where(flag_cols, 2).cast("int")
+    s = _sum_where(flag_cols, 1).cast("int")
     qcf = (
         F.when(s.between(1, 3) & (h == 0), F.lit(1))
         .when((h >= 2) | (s > 3), F.lit(2))
@@ -163,15 +156,23 @@ def add_qcf(
         .otherwise(F.lit(None))
         .cast("tinyint")
     )
-    out = out.withColumn(qcf_col, qcf)
-    out = out.withColumn(
-        f"{value_col}_qcf",
-        F.when(F.col(qcf_col) == 2, F.lit(None)).otherwise(F.col(value_col)),
-    ).withColumn(
-        f"{value_col}_qcf0",
-        F.when(F.col(qcf_col) > 0, F.lit(None)).otherwise(F.col(value_col)),
+    return df.withColumns(
+        {
+            f"sum_hardflags{suffix}": h,
+            f"sum_softflags{suffix}": s,
+            qcf_col: qcf,
+            **_filtered_series(qcf, value_col),
+        }
     )
-    return out
+
+
+def _filtered_series(qcf: Column, value_col: str) -> dict[str, Column]:
+    """``value_qcf`` (QCF==2 nulled) and ``value_qcf0`` (QCF==0 kept)."""
+    v = F.col(value_col)
+    return {
+        f"{value_col}_qcf": F.when(qcf == 2, F.lit(None)).otherwise(v),
+        f"{value_col}_qcf0": F.when(qcf > 0, F.lit(None)).otherwise(v),
+    }
 
 
 def add_qcf_daynight(
@@ -202,11 +203,5 @@ def add_qcf_daynight(
         q = F.when(
             (q >= nighttime_accept_qcf_below) & (F.col(nighttime_col) == 1), F.lit(2)
         ).otherwise(q)
-    out = out.withColumn(qcf_col, q.cast("tinyint"))
-    return out.withColumn(
-        f"{value_col}_qcf",
-        F.when(F.col(qcf_col) == 2, F.lit(None)).otherwise(F.col(value_col)),
-    ).withColumn(
-        f"{value_col}_qcf0",
-        F.when(F.col(qcf_col) > 0, F.lit(None)).otherwise(F.col(value_col)),
-    )
+    q = q.cast("tinyint")
+    return out.withColumns({qcf_col: q, **_filtered_series(q, value_col)})

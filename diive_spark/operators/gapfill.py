@@ -2,7 +2,11 @@
 
 All operators are pure window expressions (gaps-and-islands): no kernels,
 no joins — one sort-shuffle per series ordering that Catalyst shares across
-the chained windows.
+the chained windows (none at all when the input is already hash-partitioned
+by the key). The fills look a bounded number of rows back and ahead
+(``rowsBetween(-n, n)``), never to the end of the series: Spark evaluates
+an ``unboundedFollowing`` frame afresh for every row, which is quadratic in
+the series length.
 """
 
 from __future__ import annotations
@@ -69,6 +73,17 @@ def linear_interp_limited(
 
     ``limit_area='inside'`` ⇒ only gaps with a valid value on BOTH sides.
 
+    Bounded frames, exact: a fillable gap holds at most ``gap_limit``
+    nulls, so both of its anchors lie within ``reach = gap_limit + 1`` rows
+    of every row in it. The nearest valid value and its row position are
+    ``last(ignorenulls)`` over the ``reach`` rows before and
+    ``first(ignorenulls)`` over the ``reach`` rows after; the gap length is
+    ``next_pos - prev_pos - 1``. A longer gap either leaves an anchor out of
+    reach (null) or measures longer than ``gap_limit`` — unfilled either
+    way, as in the reference. The interpolation evaluates in
+    ``np.interp``'s order (slope first), so values equal pandas' bit for
+    bit.
+
     ``chunk_slots`` (with ``grid_step`` = the grid spacing of ``ts_col``):
     halo-chunk the per-key windows so one monster series never lands in a
     single task.  halo = gap_limit+1 slots is EXACT: a fillable gap (≤
@@ -96,42 +111,36 @@ def linear_interp_limited(
         ).drop("__slotpos", "__chunk")
     part = key_col if isinstance(key_col, list) else [key_col]
     w_ord = Window.partitionBy(*part).orderBy(ts_col)
-    w_prev = w_ord.rowsBetween(Window.unboundedPreceding, -1)
-    w_next = w_ord.rowsBetween(1, Window.unboundedFollowing)
-    pos = F.row_number().over(w_ord)
+    reach = gap_limit + 1
+    w_prev = w_ord.rowsBetween(-reach, -1)
+    w_next = w_ord.rowsBetween(1, reach)
     v = F.col(value_col)
-
-    run_id = F.count(value_col).over(
-        w_ord.rowsBetween(Window.unboundedPreceding, 0)
+    vpos = F.when(v.isNotNull(), F.col("__pos"))
+    d = df.withColumn("__pos", F.row_number().over(w_ord)).withColumns(
+        {
+            "__prev_v": F.last(value_col, ignorenulls=True).over(w_prev),
+            "__prev_p": F.last(vpos, ignorenulls=True).over(w_prev),
+            "__next_v": F.first(value_col, ignorenulls=True).over(w_next),
+            "__next_p": F.first(vpos, ignorenulls=True).over(w_next),
+        }
     )
-    d = (
-        df.withColumn("__pos", pos)
-        .withColumn("__vpos", F.when(v.isNotNull(), F.col("__pos")))
-        .withColumn("__run", run_id)
-    )
-    prev_v = F.last(value_col, ignorenulls=True).over(w_prev)
-    prev_p = F.last("__vpos", ignorenulls=True).over(w_prev)
-    next_v = F.first(value_col, ignorenulls=True).over(w_next)
-    next_p = F.first("__vpos", ignorenulls=True).over(w_next)
-    run_w = Window.partitionBy(*part, "__run")
-    gap_len = F.sum(F.when(v.isNull(), 1).otherwise(0)).over(run_w)
+    prev_v, prev_p = F.col("__prev_v"), F.col("__prev_p")
+    next_v, next_p = F.col("__next_v"), F.col("__next_p")
 
-    interp = prev_v + (next_v - prev_v) * (F.col("__pos") - prev_p) / (next_p - prev_p)
+    # np.interp's order of operations (slope first), which pandas uses
+    interp = (next_v - prev_v) / (next_p - prev_p) * (F.col("__pos") - prev_p) + prev_v
     fillable = (
         v.isNull()
         & prev_v.isNotNull()
         & next_v.isNotNull()
-        & (gap_len <= gap_limit)
+        & (next_p - prev_p - 1 <= gap_limit)
     )
-    out_col = out_col or value_col
-    d = d.withColumn("__filled", F.when(fillable, interp).otherwise(v))
+    cols = {}
     if flag_col:
-        d = d.withColumn(
-            flag_col,
-            F.when(fillable, F.lit(1)).otherwise(F.lit(0)).cast("tinyint"),
-        )
-    return d.withColumn(out_col, F.col("__filled")).drop(
-        "__pos", "__vpos", "__run", "__filled"
+        cols[flag_col] = F.when(fillable, F.lit(1)).otherwise(F.lit(0)).cast("tinyint")
+    cols[out_col or value_col] = F.when(fillable, interp).otherwise(v)
+    return d.withColumns(cols).drop(
+        "__pos", "__prev_v", "__prev_p", "__next_v", "__next_p"
     )
 
 

@@ -115,22 +115,33 @@ def hampel_flag_expr(
     over the NON-NULL record positions (localsd.py:77-91 rolls over the
     dropna'd series). ``winsize`` must be odd (centered frame).
 
+    One window over every row: ordered by ``(value IS NULL, ts)``, so each
+    key's null rows sort after all of its non-null rows. A non-null row's
+    ``±winsize//2`` frame then holds only its dropna'd neighbours, plus —
+    near the end of the series — trailing null rows that ``percentile``,
+    ``stddev_samp`` and ``count`` skip. Each aggregate is computed once per
+    row. Null rows get flag 0.
+
     ``chunk_rows``: halo-chunk the per-key window so a monster series never
     lands in one task — exact global row numbers (no per-key-wide window),
     winsize//2 halo rows duplicated across each chunk edge, window runs per
     (key, chunk), own rows kept.  Chunked output == unchunked output for
     ANY null distribution (the row frame rolls over non-null positions and
-    chunking happens on exactly those positions); pytest-pinned."""
+    chunking happens on exactly those positions); pytest-pinned. Only this
+    path filters out the null rows and unions them back with flag 0."""
     half = winsize // 2
-    nn = df.filter(F.col(value_col).isNotNull())
+    v = F.col(value_col)
     if chunk_rows:
         from diive_spark.operators.chunking import (
             explode_halo_chunks,
             with_global_rn,
         )
 
-        nn = explode_halo_chunks(
-            with_global_rn(nn, key_col, ts_col), "__rn", chunk_rows, half
+        src = explode_halo_chunks(
+            with_global_rn(df.filter(v.isNotNull()), key_col, ts_col),
+            "__rn",
+            chunk_rows,
+            half,
         )
         w = (
             Window.partitionBy(key_col, "__chunk")
@@ -138,26 +149,35 @@ def hampel_flag_expr(
             .rowsBetween(-half, half)
         )
     else:
-        w = Window.partitionBy(key_col).orderBy(ts_col).rowsBetween(-half, half)
-    med = F.expr(f"percentile({value_col}, 0.5)").over(w)
-    sd = F.stddev_samp(value_col).over(w)
-    cnt = F.count(value_col).over(w)
-    v = F.col(value_col)
-    flagged = nn.withColumn(
+        src = df
+        w = (
+            Window.partitionBy(key_col)
+            .orderBy(v.isNull(), ts_col)
+            .rowsBetween(-half, half)
+        )
+    stats = src.withColumns(
+        {
+            "__med": F.expr(f"percentile({value_col}, 0.5)").over(w),
+            "__sd": F.stddev_samp(value_col).over(w),
+            "__cnt": F.count(value_col).over(w),
+        }
+    )
+    med, sd = F.col("__med"), F.col("__sd")
+    flagged = stats.withColumn(
         flag_col,
         F.when(
-            (cnt >= 3) & ((v > med + n_sd * sd) | (v < med - n_sd * sd)), F.lit(2)
+            (F.col("__cnt") >= 3) & ((v > med + n_sd * sd) | (v < med - n_sd * sd)),
+            F.lit(2),
         )
         .otherwise(F.lit(0))
         .cast("tinyint"),
-    )
-    if chunk_rows:
-        flagged = flagged.filter(
-            F.col("__chunk") == F.floor(F.col("__rn") / chunk_rows)
-        ).drop("__rn", "__chunk")
-    nulls = df.filter(F.col(value_col).isNull()).withColumn(
-        flag_col, F.lit(0).cast("tinyint")
-    )
+    ).drop("__med", "__sd", "__cnt")
+    if not chunk_rows:
+        return flagged
+    flagged = flagged.filter(
+        F.col("__chunk") == F.floor(F.col("__rn") / chunk_rows)
+    ).drop("__rn", "__chunk")
+    nulls = df.filter(v.isNull()).withColumn(flag_col, F.lit(0).cast("tinyint"))
     return flagged.unionByName(nulls)
 
 

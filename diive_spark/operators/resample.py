@@ -27,20 +27,21 @@ change semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from diive_spark.operators.sanitize import ts_shift
 
 
-def bucket_end(ts_col: str, seconds: int):
-    """END label of the ``[start, start+seconds)`` bucket containing ``ts``.
+def bucket_end(ts: str | Column, seconds: int) -> Column:
+    """END label of the ``[start, start+seconds)`` bucket containing ``ts``
+    (a column name or expression).
 
     Equivalent to ``F.window(ts, dur).end`` but as a plain expression so it
     stays inside whole-stage codegen and composes with arbitrary column types
     (timestamp and timestamp_ntz).
     """
-    c = F.col(ts_col)
+    c = F.col(ts) if isinstance(ts, str) else ts
     epoch = F.unix_micros(c.cast("timestamp"))
     end_us = (F.floor(epoch / (seconds * 1_000_000)) + 1) * (seconds * 1_000_000)
     return F.timestamp_micros(end_us.cast("long"))
@@ -70,9 +71,7 @@ def resample_gated(
     if source_freq_seconds:
         # END -> MIDDLE for correct bin assignment (resampling.py:67-68)
         ts_eff = ts_shift(ts_eff, -source_freq_seconds / 2)
-    binned = df.withColumn("__ts_mid", ts_eff).withColumn(
-        window_col, bucket_end("__ts_mid", bucket_seconds)
-    )
+    binned = df.withColumn(window_col, bucket_end(ts_eff, bucket_seconds))
 
     if salt_buckets > 0:
         salt = (F.crc32(F.col(ts_col).cast("string")) % salt_buckets).alias("__salt")
@@ -102,18 +101,13 @@ def resample_gated(
     # slots — including records whose value is NaN (resampling.py:76-79) —
     # while the gate itself compares the NON-null count (resampling.py:88,96).
     w = Window.partitionBy(key_col)
-    gated = (
+    floor_count = F.floor(F.col("__maxcount") * mincounts_perc)
+    mincount = F.when(floor_count < 3, F.lit(1)).otherwise(floor_count)
+    return (
         agg.withColumn("__maxcount", F.max("__n_slots").over(w))
-        .withColumn(
-            "__mincount",
-            F.when(
-                F.floor(F.col("__maxcount") * mincounts_perc) < 3, F.lit(1)
-            ).otherwise(F.floor(F.col("__maxcount") * mincounts_perc)),
-        )
-        .filter(F.col("n_vals") >= F.col("__mincount"))
+        .filter(F.col("n_vals") >= mincount)
         .select(key_col, window_col, "agg_mean", "agg_sum", "n_vals")
     )
-    return gated
 
 
 def cascade_tiers(
@@ -130,8 +124,10 @@ def cascade_tiers(
     aggregating aggregates — the min-count gate must see raw counts per
     level; SURVEY.md §2.3 note after A17).
 
-    Returns ``{tier.name: gated DataFrame}``. The binned source is reused
-    across tiers by Spark's shuffle reuse when the plans share the scan.
+    Returns ``{tier.name: gated DataFrame}``. Each tier is its own plan
+    over ``df``: nothing is shared between tiers, so persist ``df`` when it
+    is expensive — each tier then reads the cached rows and aggregates them
+    with no exchange beyond its own (key, bucket) aggregation.
     """
     out = {}
     for tier in tiers:

@@ -7,14 +7,19 @@
 In Spark there is no index, so every step is an explicit column transform.
 All steps are pure DataFrame ops (no Python UDFs): sorting is deferred to the
 window operators that need order, so ``sanitize`` costs exactly one shuffle
-(the dedup window on (key, ts)) plus one more for the grid join when
-``regularize=True``.
+plus one more for the grid join when ``regularize=True``. That shuffle
+hash-partitions on the key alone (:func:`kernel_partition`), which also
+satisfies the dedup window's (key, ts) clustering — so a per-key grouped
+kernel after the dedup (e.g. ``zscore_flag_iterated``) reuses it instead of
+shuffling again.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from diive_spark.session import kernel_partition
 
 
 def dedup_keep_last(
@@ -37,7 +42,8 @@ def dedup_keep_last(
         order = F.col(order_col)
     w = Window.partitionBy(key_col, ts_col).orderBy(order.desc())
     return (
-        df.withColumn("__rn", F.row_number().over(w))
+        kernel_partition(df, key_col)
+        .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
