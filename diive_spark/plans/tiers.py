@@ -1,38 +1,45 @@
-"""Continuous-aggregate tier engine with incremental merge, lineage
-checkpointing, idempotent resume and tier expiry (north-rule core).
+"""Continuous-aggregate tier engine: incremental partition-scoped merge,
+lineage manifest, idempotent crash resume, compaction and expiry.
 
-Reference analog: the multi-tier resample family
-(/root/reference/diive/core/times/resampling.py:13-132 re-run per
-resolution) + file-at-a-time merge (filereader.py:215-273). The reference
-recomputes everything per run; this engine is INCREMENTAL:
+Reference analog: diive's multi-tier resample family
+(``diive/core/times/resampling.py``, re-run per resolution) and its
+file-at-a-time merge (``filereader.py``).  The reference recomputes
+everything per run; this engine is INCREMENTAL:
 
-  * Tier tables store PARTIAL aggregates per (key, window):
-    ``(psum, pcount, pslots)``. Late/new source rows aggregate into deltas
-    that MERGE by summation — associative and commutative, so any batch
-    order yields identical tables (exactness preserved: mean = psum/pcount
-    recomposed after merge, min-count gate re-evaluated over merged counts
-    at read time, exactly like the reference re-running resample).
+  * Tier tables store PARTIAL aggregates per (key, window), by default
+    ``(psum, pcount, pslots)``.  Late or new source rows aggregate into
+    deltas that MERGE by summation — associative and commutative, so any
+    batch order yields the same tables (mean = psum/pcount recomposed after
+    the merge, the min-count gate re-evaluated over merged counts at read
+    time, exactly like the reference re-running resample).  Other
+    mergeable summaries (M4 tuples, t-digests, KLL / Frequent-Directions
+    sketches) plug in as partial specs.
   * One partial pass per batch, shared across tiers (the sub-aggregate
     sharing of *Factor Windows*, ICDE 2022): the finest tier's partials are
     computed once, and each coarser nested tier's delta is those rows
-    relabelled to its own window, summed by the merge. One Spark action
-    finds every tier's affected days; staged row counts and the watermark
-    come from the staged files' parquet footers.
-  * Storage is a partitioned columnar table (parquet in the sandbox; the
-    layout — partition by (tier, window_day) — and the snapshot/lineage
-    manifest mirror Iceberg semantics: in production the same operations
-    bind to Iceberg MERGE INTO + snapshot summary properties +
-    expire_snapshots).
-  * Lineage: every applied source batch records
-    (batch_id, rows, per-partition row counts, watermark) in the manifest;
-    re-applying an already-recorded batch_id is a no-op, so a killed job
-    re-run resumes idempotently.
-  * Expiry: partitions older than ``retention_buckets`` windows are dropped
-    at the partition level (directory delete recorded in the manifest).
+    relabelled to its own window, summed by the merge.  One Spark action
+    finds every tier's affected days.
+  * One staged write per batch: every tier's delta and live affected days
+    go through one exchange, one merge and one parquet write partitioned
+    by (tier, window_day); each tier's subtree then moves into that tier's
+    staging dir.  Staged row counts, the watermark and the snapshot
+    summary come from the staged files' footers and listing.
+  * Storage: one partitioned parquet table per tier
+    (``<root>/<tier>/data/window_day=YYYY-MM-DD/``) plus a snapshot/lineage
+    manifest — the Iceberg semantics of ``MERGE INTO`` with dynamic
+    partition overwrite, snapshot summary properties and
+    ``expire_snapshots``.
+  * Lineage: every applied source batch records (batch_id, rows,
+    per-partition row counts, watermark, summary) in each tier's manifest;
+    re-applying a recorded batch_id is a no-op, and a pending intent lets a
+    killed run resume without merging twice.
+  * Expiry drops whole day partitions older than a cutoff, recorded in the
+    manifest.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -42,46 +49,61 @@ from dataclasses import asdict
 from pathlib import Path
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from diive_spark.config import TierSpec
-from diive_spark.operators.sanitize import ts_shift
 
 PARTIALS = ["psum", "pcount", "pslots"]
+# snapshot-summary fields a pending intent carries from staging to commit
+SUMMARY_KEYS = ("added_files", "added_bytes", "removed_files", "stage_s")
 
 
-def _window_day(window_end_s) -> Column:
+# The label expressions below are SQL text: apply_batch builds them for every
+# tier of every batch, and one parsed expression costs one py4j call where
+# the equivalent Column chain costs one per operator.
+
+
+def _window_day(window_end_s: str) -> str:
     """The ``window_day`` partition of a window ending at ``window_end_s``
     (the day holding the window's last instant)."""
-    return F.date_format(F.timestamp_seconds(window_end_s - 1), "yyyy-MM-dd")
+    return f"date_format(timestamp_seconds({window_end_s} - 1), 'yyyy-MM-dd')"
 
 
-def _relabel(base: TierSpec, tier: TierSpec) -> Column:
+def _relabel(base: TierSpec, tier: TierSpec) -> str:
     """``tier``'s window end for a row of ``base`` partials, exact in
     integers when ``tier.seconds`` is a multiple of ``base.seconds``: the
     base window ``(e - b, e]`` lies in the tier window that holds its start
     ``e - b``."""
-    start = F.col("window_end_s") - base.seconds
-    return start - F.pmod(start, F.lit(tier.seconds)) + tier.seconds
+    start = f"(window_end_s - {base.seconds})"
+    return f"({start} - pmod({start}, {tier.seconds}) + {tier.seconds})"
 
 
-def _footer_stats(staging: Path) -> tuple[dict[str, int], int | None]:
-    """Per-day row counts and the max ``window_end_s`` of a staged write,
-    read from the parquet footers (no Spark job)."""
+def _footer_stats(staging: Path) -> dict:
+    """Per-day row counts, the max ``window_end_s`` and the number and
+    bytes of the data files of a staged write, read from the parquet
+    footers and the directory listing (no Spark job)."""
     counts: dict[str, int] = {}
     watermark = None
+    files = size = 0
     for f in sorted(staging.glob("window_day=*/*.parquet")):
         day = f.parent.name.split("=", 1)[1]
         meta = pq.read_metadata(f)
         counts[day] = counts.get(day, 0) + meta.num_rows
+        files += 1
+        size += f.stat().st_size
         paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
         j = paths.index("window_end_s")
         for i in range(meta.num_row_groups):
             stats = meta.row_group(i).column(j).statistics
             if stats is not None and stats.has_min_max:
                 watermark = stats.max if watermark is None else max(watermark, stats.max)
-    return counts, watermark
+    return {
+        "staged_rows": counts,
+        "watermark_s": watermark,
+        "added_files": files,
+        "added_bytes": size,
+    }
 
 
 class SumCountPartials:
@@ -215,6 +237,7 @@ class TierEngine:
         partials=None,
     ):
         self.spark = spark
+        self.root = Path(root)
         self.tiers = tiers
         self.stores = {t.name: TierStore(root, t) for t in tiers}
         self.key_col = key_col
@@ -226,6 +249,17 @@ class TierEngine:
         self.partials = partials or SumCountPartials()
 
     # -- partial aggregation -------------------------------------------------
+    def _window_end(self, tier: TierSpec) -> str:
+        """A source row's ``window_end_s`` in ``tier`` (epoch seconds), with
+        the END→MIDDLE shift (``-source_freq_seconds / 2``, in µs) applied
+        before bucketing."""
+        shift = int(-(self.source_freq_seconds or 0) / 2 * 1_000_000)
+        us = tier.seconds * 1_000_000
+        return (
+            f"CAST((FLOOR((unix_micros(CAST(`{self.ts_col}` AS TIMESTAMP)) + {shift})"
+            f" / {us}) + 1) * {tier.seconds} AS BIGINT)"
+        )
+
     def _partials(self, df: DataFrame, tier: TierSpec) -> DataFrame:
         """Map-side partial aggregates per (key, window_end).
 
@@ -237,17 +271,11 @@ class TierEngine:
         grouping — the rest of the engine (lineage, intent-log resume,
         partition-scoped swap, expiry, compaction) is unchanged either way.
         """
-        ts_eff = F.col(self.ts_col)
-        if self.source_freq_seconds:
-            ts_eff = ts_shift(ts_eff, -self.source_freq_seconds / 2)
-        us = tier.seconds * 1_000_000
-        wend = (F.floor(F.unix_micros(ts_eff.cast("timestamp")) / us) + 1) * tier.seconds
-        base = df.withColumn("window_end_s", wend.cast("long")).withColumn(
-            "_ts_s",
-            F.floor(
-                F.unix_micros(F.col(self.ts_col).cast("timestamp"))
-                / 1_000_000
-            ).cast("long"),
+        base = df.selectExpr(
+            "*",
+            f"{self._window_end(tier)} AS window_end_s",
+            f"CAST(FLOOR(unix_micros(CAST(`{self.ts_col}` AS TIMESTAMP)) / 1000000) AS BIGINT)"
+            " AS _ts_s",
         )
         if hasattr(self.partials, "partial_frame"):
             agg = self.partials.partial_frame(
@@ -258,12 +286,12 @@ class TierEngine:
             agg = base.groupBy(self.key_col, "window_end_s").agg(
                 *self.partials.partial_exprs(self.value_col, "_ts_s")
             )
-        return agg.withColumn("window_day", _window_day(F.col("window_end_s")))
+        return agg.selectExpr("*", f"{_window_day('window_end_s')} AS window_day")
 
     # -- incremental apply ----------------------------------------------------
     def apply_batch(self, source: DataFrame, batch_id: str | None = None) -> dict:
         """MERGE one source batch into every tier — PARTITION-SCOPED, with
-        the Spark work shared across tiers.
+        one partial pass and one staged write shared by all tiers.
 
         Only the batch's ``affected_days`` partitions are merged, staged
         and swapped; untouched ``window_day=`` directories stay in place
@@ -272,41 +300,49 @@ class TierEngine:
 
         Each tier's manifest is read once and decides that tier's mode:
         *skip* (batch_id already in ``snapshots``), *replay* (batch_id in
-        ``pending``) or *fresh*.  For the fresh tiers:
+        ``pending``) or *fresh*.  Every fresh tier is staged by ONE plan
+        and ONE parquet write (:meth:`_stage`):
 
+        * one Spark action (a ``collect_set`` of each tier's window ends
+          over the source) yields every fresh tier's affected days;
         * one partial pass: ``_partials(source, base)`` with ``base`` the
-          finest fresh tier, persisted for the batch and released on exit.
-          A coarser tier whose width is a multiple of ``base``'s takes the
-          base rows relabelled to its own ``window_end_s``/``window_day``
-          as its delta; the merge ``groupBy`` sums them.  Widths nest and
-          the END→MIDDLE shift precedes bucketing, so every base window
-          lies in exactly one coarse window: counts stay exact, sums
-          change only in float association.  A width that does not nest,
-          and a kernel spec (``partial_frame``), computes its delta from
-          the source through ``_partials`` instead;
-        * one Spark action (a ``collect_set`` per tier over the base
-          partials) yields every nested tier's affected days;
-        * live days are read with the delta's schema (no inference job)
-          and repartitioned by (day, key) before the merge, so one
-          exchange serves both the merge and the day-partitioned write;
-        * staged row counts and the watermark come from the staged
-          files' parquet footers, not from a Spark read-back.
+          finest fresh tier.  A coarser tier whose width is a multiple of
+          ``base``'s takes the base rows relabelled to its own
+          ``window_end_s``/``window_day`` as its delta; the merge sums
+          them.  Widths nest and the END→MIDDLE shift precedes bucketing,
+          so every base window lies in exactly one coarse window: counts
+          stay exact, sums change only in float association.  A width
+          that does not nest, and a kernel spec (``partial_frame``),
+          computes its delta from the source through ``_partials``;
+        * every tier's live affected days (read by explicit path with the
+          delta's schema) and delta are tagged with a literal ``tier``
+          column and unioned; one merge (whose exchange also spreads each
+          day's rows over tasks by key) and one
+          ``partitionBy("tier", "window_day")`` write stage them all
+          under ``<root>/_staging_<batch_id>``, and each ``tier=<name>``
+          subtree then moves to ``<root>/<name>/_staging_<batch_id>``;
+        * staged row counts, the watermark and the added files/bytes come
+          from the staged files' parquet footers, not from a Spark
+          read-back.
 
-        Crash-safe + idempotent via an intent log, per tier:
+        From the moved staging dir on, crash safety is an intent log per
+        tier:
 
-        1. stage the merged affected days;
-        2. record a ``pending`` intent (batch_id, days, staged counts,
-           watermark) in the manifest;
-        3. swap each staged day directory into the live table;
-        4. commit the snapshot record and clear the intent.
+        1. record a ``pending`` intent (batch_id, days, staged counts,
+           watermark, snapshot summary) in the manifest;
+        2. swap each staged day directory into the live table;
+        3. commit the snapshot record and clear the intent.
 
         A replayed tier finishes its swaps FROM STAGING without
         recomputing — recomputing would re-read already-swapped days and
-        double-merge the delta.  A staging dir with no intent record is a
-        pre-intent crash leftover: discarded and recomputed from unchanged
-        live data.
+        double-merge the delta.  A staging dir with no intent record (the
+        shared one, or a fresh tier's) is a pre-intent crash leftover:
+        discarded on entry and recomputed from unchanged live data.
         """
         batch_id = batch_id or uuid.uuid4().hex
+        shared = self.root / f"_staging_{batch_id}"
+        if shared.exists():  # crash before every subtree moved
+            shutil.rmtree(shared)
         metrics: dict[str, dict] = {}
         manifests: dict[str, dict] = {}
         intents: dict[str, dict | None] = {}
@@ -321,121 +357,145 @@ class TierEngine:
                 None,
             )
         fresh = [t for t in self.tiers if t.name in intents and intents[t.name] is None]
-        base = None
-        try:
-            if fresh:
-                base_tier = min(fresh, key=lambda t: t.seconds)
-                base = self._partials(source, base_tier).persist()
-                deltas, days = self._shared_deltas(source, base, base_tier, fresh)
-            for tier in self.tiers:
-                if tier.name not in manifests:
-                    continue
-                store, manifest = self.stores[tier.name], manifests[tier.name]
-                intent = intents[tier.name]
-                if intent is None:
-                    staging = store.root / f"_staging_{batch_id}"
-                    if staging.exists():  # pre-intent crash leftover
-                        shutil.rmtree(staging)
-                    delta, regroup = deltas[tier.name]
-                    staged_counts, watermark = self._stage(
-                        store, delta, regroup, days[tier.name], staging
-                    )
-                    intent = {
-                        "batch_id": batch_id,
-                        "affected_days": days[tier.name],
-                        "staged_rows": staged_counts,
-                        "watermark_s": watermark,
-                    }
-                    manifest.setdefault("pending", []).append(intent)
-                    store.write_manifest(manifest)
-                self._swap_days(store, batch_id, intent["affected_days"])
-                metrics[tier.name] = self._commit(store, manifest, intent)
-        finally:
-            if base is not None:
-                base.unpersist()
+        if fresh:
+            t0 = time.perf_counter()
+            days = self._stage(source, fresh, batch_id)
+            stage_s = time.perf_counter() - t0
+        for tier in self.tiers:
+            if tier.name not in manifests:
+                continue
+            store, manifest = self.stores[tier.name], manifests[tier.name]
+            intent = intents[tier.name]
+            if intent is None:
+                affected = days[tier.name]
+                intent = {
+                    "batch_id": batch_id,
+                    "affected_days": affected,
+                    **_footer_stats(store.root / f"_staging_{batch_id}"),
+                    "removed_files": sum(
+                        1
+                        for d in affected
+                        for _ in (store.data_dir / f"window_day={d}").glob("*.parquet")
+                    ),
+                    "stage_s": stage_s,
+                }
+                manifest.setdefault("pending", []).append(intent)
+                store.write_manifest(manifest)
+            t0 = time.perf_counter()
+            self._swap_days(store, batch_id, intent["affected_days"])
+            metrics[tier.name] = self._commit(
+                store, manifest, intent, time.perf_counter() - t0
+            )
         return metrics
 
-    def _shared_deltas(
-        self, source: DataFrame, base: DataFrame, base_tier: TierSpec, fresh: list
-    ) -> tuple[dict, dict]:
-        """Per fresh tier: ``(delta, regroup)`` and its sorted affected days.
-
-        ``regroup`` marks a relabelled delta, which holds several rows per
-        (key, window) and so needs the merge ``groupBy`` even when no live
-        day is touched."""
-        nested = [t for t in fresh if t.seconds % base_tier.seconds == 0]
+    def _stage(self, source: DataFrame, fresh: list, batch_id: str) -> dict:
+        """Merge every fresh tier's delta into its live affected days with
+        one plan and one parquet write, then move each tier's subtree of
+        the write to ``<root>/<tier>/_staging_<batch_id>``; returns each
+        tier's sorted affected days."""
+        # collect the distinct window ends (integers) and label only those
+        row = source.selectExpr(
+            *[
+                f"transform(collect_set({self._window_end(t)}), w -> {_window_day('w')})"
+                for t in fresh
+            ]
+        ).first()
+        days = {t.name: sorted(set(row[i])) for i, t in enumerate(fresh)}
+        base_tier = min(fresh, key=lambda t: t.seconds)
+        base = self._partials(source, base_tier)
         kernel = hasattr(self.partials, "partial_frame")
-        deltas, days = {}, {}
+        merge, keep = [], []
         for tier in fresh:
+            # a relabelled delta holds several rows per (key, window), so it
+            # needs the merge even when no live day is touched
+            relabel = (
+                tier is not base_tier
+                and tier.seconds % base_tier.seconds == 0
+                and not kernel
+            )
             if tier is base_tier:
-                deltas[tier.name] = (base, False)
-            elif tier in nested and not kernel:
+                delta = base
+            elif relabel:
                 wend = _relabel(base_tier, tier)
-                deltas[tier.name] = (
-                    base.withColumn("window_end_s", wend).withColumn(
-                        "window_day", _window_day(wend)
-                    ),
-                    True,
+                relabelled = {"window_end_s": wend, "window_day": _window_day(wend)}
+                delta = base.selectExpr(
+                    *[f"{relabelled.get(c, f'`{c}`')} AS `{c}`" for c in base.columns]
                 )
             else:
                 delta = self._partials(source, tier)
-                deltas[tier.name] = (delta, False)
-                if tier not in nested:
-                    days[tier.name] = sorted(
-                        r[0] for r in delta.select("window_day").distinct().collect()
-                    )
-        row = base.agg(
-            *[F.collect_set(_window_day(_relabel(base_tier, t))) for t in nested]
-        ).first()
-        days.update({t.name: sorted(row[i]) for i, t in enumerate(nested)})
-        return deltas, days
-
-    def _stage(
-        self,
-        store: TierStore,
-        delta: DataFrame,
-        regroup: bool,
-        affected_days: list[str],
-        staging: Path,
-    ) -> tuple[dict[str, int], int | None]:
-        """Merge ``delta`` into the live ``affected_days`` and write the
-        result to ``staging``; returns the staged per-day row counts and
-        the max ``window_end_s``, both read from the parquet footers."""
-        # read ONLY the touched day directories — explicit paths, so
-        # pruning cannot be defeated by the date->string cast
-        live_paths = [
-            str(store.data_dir / f"window_day={d}")
-            for d in affected_days
-            if (store.data_dir / f"window_day={d}").exists()
-        ]
-        frame = delta
-        if live_paths:
-            touch = (
-                self.spark.read.schema(delta.schema)
-                .option("basePath", str(store.data_dir))
-                .parquet(*live_paths)
+            store = self.stores[tier.name]
+            # read ONLY the touched day directories — explicit paths, so
+            # pruning cannot be defeated by the date->string cast
+            live_paths = [
+                str(store.data_dir / f"window_day={d}")
+                for d in days[tier.name]
+                if (store.data_dir / f"window_day={d}").exists()
+            ]
+            frame = delta
+            if live_paths:
+                frame = (
+                    self.spark.read.schema(delta.schema)
+                    .option("basePath", str(store.data_dir))
+                    .parquet(*live_paths)
+                    .unionByName(delta)
+                )
+            tagged = frame.selectExpr(
+                f"'{tier.name}' AS tier", *[f"`{c}`" for c in frame.columns]
             )
-            frame = touch.unionByName(delta)
-        # repartition on (day, key), not day alone: one-column partitioning
-        # would funnel a whole day into a single task and a single giant
-        # file; hashing the key in keeps day writes parallel (the writer
-        # still splits per-day directories via partitionBy; cold days
-        # re-coalesce via compact()).  The merge below groups by a superset
-        # of these columns, so this one exchange serves it too.
-        frame = frame.repartition(F.col("window_day"), F.col(self.key_col))
-        if live_paths or regroup:
-            group = [self.key_col, "window_end_s", "window_day"]
+            # rows with no live day and no relabel skip the merge, so a spec
+            # whose merge is not the identity on one row (t-digest
+            # re-compression) stores them exactly as the partial pass made them
+            (merge if live_paths or relabel else keep).append(tagged)
+        # Staged rows are hashed on their key as well as their (tier, day):
+        # (tier, day) alone would funnel a whole day into a single task and a
+        # single giant file, where this keeps day writes parallel (the writer
+        # still splits per-tier, per-day directories via partitionBy; cold
+        # days re-coalesce via compact()).  For merged rows that is the
+        # merge's own exchange, after a map-side partial merge that folds a
+        # relabelled delta's many rows per coarse window; rows that skip the
+        # merge get the same spread from one repartition.
+        staged = []
+        if merge:
+            frame = functools.reduce(DataFrame.unionByName, merge)
+            group = ["tier", self.key_col, "window_end_s", "window_day"]
             if hasattr(self.partials, "merge_frame"):
-                frame = self.partials.merge_frame(frame, group)
+                staged.append(self.partials.merge_frame(frame, group))
             else:
-                frame = frame.groupBy(*group).agg(*self.partials.merge_exprs())
-        frame.write.mode("overwrite").partitionBy("window_day").parquet(str(staging))
-        return _footer_stats(staging)
+                staged.append(frame.groupBy(*group).agg(*self.partials.merge_exprs()))
+        if keep:
+            staged.append(
+                functools.reduce(DataFrame.unionByName, keep).repartition(
+                    "tier", "window_day", self.key_col
+                )
+            )
+        shared = self.root / f"_staging_{batch_id}"
+        functools.reduce(DataFrame.unionByName, staged).write.mode(
+            "overwrite"
+        ).partitionBy("tier", "window_day").parquet(str(shared))
+        for tier in fresh:
+            store = self.stores[tier.name]
+            staging = store.root / f"_staging_{batch_id}"
+            if staging.exists():  # pre-intent crash leftover
+                shutil.rmtree(staging)
+            subtree = shared / f"tier={tier.name}"
+            if subtree.exists():  # a tier with no rows writes no subtree
+                store.root.mkdir(parents=True, exist_ok=True)
+                os.replace(subtree, staging)
+        shutil.rmtree(shared)
+        return days
 
-    def _commit(self, store: TierStore, manifest: dict, intent: dict) -> dict:
+    def _commit(
+        self, store: TierStore, manifest: dict, intent: dict, swap_s: float
+    ) -> dict:
         """Append the snapshot record for a swapped intent and clear it:
         staged per-day counts fold into the previous snapshot's
-        partition_rows (untouched partitions are not re-read)."""
+        partition_rows (untouched partitions are not re-read).
+
+        The snapshot's ``summary`` (Iceberg analog: snapshot summary
+        properties) holds the data files and bytes the batch added and the
+        files it swapped out, all counted from the staging listing and the
+        footers, plus the staging and swap wall times; it costs no Spark
+        job."""
         batch_id, affected_days = intent["batch_id"], intent["affected_days"]
         prev = manifest["snapshots"][-1]["partition_rows"] if manifest["snapshots"] else {}
         part_counts = {**prev, **intent["staged_rows"]}
@@ -452,6 +512,10 @@ class TierEngine:
             # the source from here" cursor (Iceberg analog: a snapshot
             # summary property)
             "watermark_s": intent.get("watermark_s"),
+            "summary": {
+                **{k: intent.get(k) for k in SUMMARY_KEYS},
+                "swap_s": swap_s,
+            },
         }
         manifest["snapshots"].append(snap)
         manifest["pending"] = [
@@ -462,6 +526,7 @@ class TierEngine:
             "rows": snap["rows"],
             "partitions": len(part_counts),
             "merged_partitions": len(affected_days),
+            **snap["summary"],
         }
 
     @staticmethod
@@ -550,7 +615,9 @@ class TierEngine:
         staged, an intent is recorded, then each day is swapped
         live→trash→staged; a pending compaction found on entry is replayed
         from staging first.  Re-running compact on an already-compacted day
-        is a no-op (its file count is at or under the threshold).
+        is a no-op (its file count is at or under the threshold).  A staging
+        dir that no pending intent names was left by a crash while staging;
+        it is swept on entry.
         """
         store = self.stores[name]
 
@@ -558,6 +625,9 @@ class TierEngine:
         manifest = store.read_manifest()
         for intent in manifest.get("pending_compactions", []):
             self._swap_compaction(store, intent)
+        # every pending compaction's staging dir is swapped away by now
+        for leftover in store.root.glob("_staging_compact_*"):
+            shutil.rmtree(leftover)
 
         victims = []
         for day in days or store.partitions():

@@ -1,8 +1,9 @@
 """SparkSession factory with scale-oriented defaults.
 
-All defaults are safe for both the local[32] sandbox and a large cluster:
-AQE (runtime re-planning + skew-join splitting), Arrow for pandas UDF
-transfer, UTC session time zone so timestamp semantics are deterministic.
+All defaults are safe for both a local master and a large cluster: AQE
+(runtime re-planning + skew-join splitting), Arrow for pandas UDF
+transfer, UTC session time zone so timestamp semantics are deterministic,
+and one shuffle partition per core of the context's default parallelism.
 """
 
 from __future__ import annotations

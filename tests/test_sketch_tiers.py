@@ -161,10 +161,19 @@ def _vec_df(spark, n_keys=2, n_per_key=600, d=8):
     )
 
 
-def test_kll_multi_tier_matches_single_tier_engines(spark, tmp_path):
-    """A kernel spec computes every tier's delta from the source, while a
-    coarser tier's affected days come from the finest tier's partials: a
-    1h+1d engine holds bit-equal states to two single-tier engines."""
+def test_kll_multi_tier_matches_single_tier_engines(spark, tmp_path, monkeypatch):
+    """A kernel spec computes every tier's delta from the source and still
+    shares the one staged write of a batch: a 1h+1d engine writes once per
+    batch and holds bit-equal states to two single-tier engines."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    writes, parquet = [], DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        writes.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
     df = _series_df(spark)
     tiers = (
         TierSpec("1h", "1 hour", 3600, mincounts_perc=0.0),
@@ -180,6 +189,9 @@ def test_kll_multi_tier_matches_single_tier_engines(spark, tmp_path):
     for i, b in enumerate(_batches(df)):
         for eng in engines:
             eng.apply_batch(b, batch_id=f"kb{i}")
+    assert [w for w in writes if w.startswith(str(tmp_path / "both"))] == [
+        str(tmp_path / "both" / f"_staging_kb{i}") for i in range(3)
+    ]
 
     def state(eng, name):
         return sorted(

@@ -156,12 +156,28 @@ def test_resume_after_finest_tier_committed(spark, series_sdf, tmp_path, monkeyp
     assert_tiers_equal_oneshot(eng, series_sdf)
 
 
-def test_apply_batch_plan_shape(spark, series_sdf, tmp_path):
-    """A 3-tier batch into live days shares its Spark work across tiers —
-    one partial pass, one affected-days action, one exchange per tier's
-    merge, footer-read staged counts: at most 15 jobs (30 when every tier
-    ran its own partials, day list and staged read-back) — and releases
-    every RDD it persisted."""
+def count_parquet_writes(monkeypatch):
+    """Record every ``DataFrameWriter.parquet`` call; returns the list of
+    written paths."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    paths, parquet = [], DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        paths.append(path)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    return paths
+
+
+def test_apply_batch_plan_shape(spark, series_sdf, tmp_path, monkeypatch):
+    """A 3-tier batch into live days shares its Spark work across tiers:
+    one affected-days action over the source (2 jobs), then one partial
+    pass, exchange, merge and parquet write for every tier together
+    (3 jobs).  That is 5 jobs, against 10 when each tier staged its own
+    merge and write and 30 when each tier also ran its own partials, day
+    list and staged read-back.  No persisted RDD outlives the batch."""
     import pyspark.sql.functions as F
 
     eng = TierEngine(
@@ -172,6 +188,7 @@ def test_apply_batch_plan_shape(spark, series_sdf, tmp_path):
     eng.apply_batch(series_sdf.filter(half == 0), batch_id="a")
     sc = spark.sparkContext
     persisted = set(sc._jsc.getPersistentRDDs().keys())
+    writes = count_parquet_writes(monkeypatch)
     group = "test-apply-batch-plan-shape"
     sc.setJobGroup(group, "3-tier apply_batch into live days")
     try:
@@ -181,8 +198,172 @@ def test_apply_batch_plan_shape(spark, series_sdf, tmp_path):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert all(m[t.name]["merged_partitions"] > 0 for t in TIERS)
-    assert 0 < len(jobs) <= 15, len(jobs)
+    assert len(jobs) == 5, len(jobs)
+    assert writes == [str(tmp_path / "t9" / "_staging_b")]
     assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
+
+
+@pytest.mark.parametrize(
+    "tiers",
+    [
+        TIERS[:1],
+        TIERS[:2],
+        TIERS,
+        (TIERS[0], TierSpec("45m", "45 minutes", 2700, mincounts_perc=0.9), TIERS[2]),
+    ],
+    ids=["1", "2", "3", "3-not-nested"],
+)
+def test_apply_batch_one_write_any_tier_count(spark, series_sdf, tmp_path, monkeypatch, tiers):
+    """Every batch — the first into an empty store and a later one into
+    live days — stages all fresh tiers with exactly one parquet write."""
+    import pyspark.sql.functions as F
+
+    eng = TierEngine(
+        spark, str(tmp_path / "tw"), tiers, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    writes = count_parquet_writes(monkeypatch)
+    half = F.pmod(F.xxhash64("url", "ts"), 2)
+    for b in range(2):
+        eng.apply_batch(series_sdf.filter(half == b), batch_id=f"b{b}")
+        assert writes == [str(tmp_path / "tw" / f"_staging_b{b}")]
+        writes.clear()
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+class Crash(Exception):
+    pass
+
+
+def crash_on_call(monkeypatch, target, name, n):
+    """Make the ``n``-th call of ``target.name`` raise ``Crash`` (the
+    earlier calls run normally)."""
+    real, calls = getattr(target, name), []
+
+    def wrapper(*args, **kwargs):
+        calls.append(args)
+        if len(calls) == n:
+            raise Crash(f"{name} call {n}")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(target, name, wrapper)
+
+
+def staging_dirs(root):
+    """Every ``_staging_*`` dir under the engine root or a tier's root."""
+    return sorted(
+        str(p.relative_to(root))
+        for p in [*root.glob("_staging_*"), *root.glob("*/_staging_*")]
+    )
+
+
+@pytest.mark.parametrize("point", ["after_write", "after_one_move", "after_finest_commit"])
+def test_shared_staging_crash_resume(spark, series_sdf, tmp_path, monkeypatch, point):
+    """Crash points of the shared staged write: (a) after the write, before
+    any tier's subtree moved; (b) after one tier's subtree moved, before any
+    intent; (c) after the finest tier committed, with the other tiers'
+    staging moved but no intent.  Re-applying the batch leaves every tier
+    equal to a one-shot rollup, no staging dir behind, and a committed
+    tier's files and manifest untouched."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from diive_spark.plans.tiers import TierStore
+
+    root = tmp_path / "tcrash"
+    eng = TierEngine(
+        spark, str(root), TIERS, "url", "ts", "value", source_freq_seconds=600
+    )
+    half = F.pmod(F.xxhash64("url", "ts"), 2)
+    eng.apply_batch(series_sdf.filter(half == 0), batch_id="a")
+    b = series_sdf.filter(half == 1)
+    with monkeypatch.context() as mp:
+        if point == "after_write":
+            crash_on_call(mp, os, "replace", 1)
+        elif point == "after_one_move":
+            crash_on_call(mp, os, "replace", 2)
+        else:  # the 30m intent, the 30m commit, then the 1h intent
+            crash_on_call(mp, TierStore, "write_manifest", 3)
+        with pytest.raises(Crash):
+            eng.apply_batch(b, batch_id="b")
+
+    left = staging_dirs(root)
+    committed = ["30m"] if point == "after_finest_commit" else []
+    if point == "after_write":
+        assert left == ["_staging_b"]
+    elif point == "after_one_move":
+        assert left == ["30m/_staging_b", "_staging_b"]
+    else:
+        assert left == ["1d/_staging_b", "1h/_staging_b"]
+    for t in TIERS:
+        man = eng.stores[t.name].read_manifest()
+        assert man.get("pending", []) == []
+        want = ["a", "b"] if t.name in committed else ["a"]
+        assert [s["batch_id"] for s in man["snapshots"]] == want
+    before = {}
+    for name in committed:
+        store = eng.stores[name]
+        before[name] = (
+            {d: _partition_file_stats(store.data_dir, d) for d in store.partitions()},
+            store.read_manifest(),
+        )
+
+    m = eng.apply_batch(b, batch_id="b")
+    assert staging_dirs(root) == []
+    for name, (files, manifest) in before.items():
+        store = eng.stores[name]
+        assert m[name] == {"skipped": True}
+        assert {d: _partition_file_stats(store.data_dir, d) for d in store.partitions()} == files
+        assert store.read_manifest() == manifest
+    for t in TIERS:
+        man = eng.stores[t.name].read_manifest()
+        assert [s["batch_id"] for s in man["snapshots"]] == ["a", "b"]
+        assert man["pending"] == []
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+def test_snapshot_summary_matches_listing(spark, series_sdf, tmp_path):
+    """Each snapshot's summary — data files and bytes added, files swapped
+    out, staging and swap wall time — agrees with a directory listing of
+    the merged days taken before and after the batch."""
+    import pyspark.sql.functions as F
+
+    eng = TierEngine(
+        spark, str(tmp_path / "ts"), TIERS, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    half = F.pmod(F.xxhash64("url", "ts"), 2)
+
+    def listing(store):
+        return {
+            str(p): p.stat().st_size
+            for p in store.data_dir.glob("window_day=*/*.parquet")
+        }
+
+    for b in range(2):
+        before = {t.name: listing(eng.stores[t.name]) for t in TIERS}
+        m = eng.apply_batch(series_sdf.filter(half == b), batch_id=f"b{b}")
+        for t in TIERS:
+            store = eng.stores[t.name]
+            snap = store.read_manifest()["snapshots"][-1]
+            days = snap["merged_partitions"]
+            in_days = lambda files: {  # noqa: E731
+                f: n for f, n in files.items()
+                if any(f"/window_day={d}/" in f for d in days)
+            }
+            added = in_days(listing(store))
+            summary = snap["summary"]
+            assert summary["added_files"] == len(added) > 0
+            assert summary["added_bytes"] == sum(added.values())
+            assert summary["removed_files"] == len(in_days(before[t.name]))
+            assert summary["stage_s"] > 0 and summary["swap_s"] >= 0
+            assert {k: m[t.name][k] for k in summary} == summary
+        # the second batch lands in live days and swaps their files out
+        assert b == 0 or all(
+            store.read_manifest()["snapshots"][-1]["summary"]["removed_files"] > 0
+            for store in eng.stores.values()
+        )
 
 
 def test_idempotent_reapply(spark, series_sdf, tmp_path):
@@ -487,6 +668,36 @@ def test_compaction_crash_resume_replays_pending(spark, series_sdf, tmp_path):
     m = store.read_manifest()
     assert m.get("pending_compactions", []) == []
     assert any(c["compact_id"] == compact_id for c in m["compactions"])
+    after = gated_pdf(eng.read_tier("30m"))
+    np.testing.assert_array_equal(before["n_vals"].values, after["n_vals"].values)
+
+
+def test_compaction_sweeps_pre_intent_staging(spark, series_sdf, tmp_path):
+    """A compaction that crashed while staging (no intent recorded) leaves
+    a ``_staging_compact_*`` dir; the next compact() removes it and keeps
+    a pending compaction's staging until it is replayed."""
+    eng = TierEngine(
+        spark, str(tmp_path / "tcs"), TIERS[:1], "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    eng.apply_batch(series_sdf, batch_id="b0")
+    store = eng.stores["30m"]
+    before = gated_pdf(eng.read_tier("30m"))
+    day = store.partitions()[0]
+    day_dir = store.data_dir / f"window_day={day}"
+    for compact_id in ("orphan", "pending"):
+        spark.read.parquet(str(day_dir)).coalesce(1).write.parquet(
+            str(store.root / f"_staging_compact_{compact_id}" / f"window_day={day}")
+        )
+    m = store.read_manifest()
+    m["pending_compactions"] = [{"compact_id": "pending", "days": [day]}]
+    store.write_manifest(m)
+
+    assert eng.compact("30m", max_files_per_day=10_000) == []
+    assert not list(store.root.glob("_staging_compact_*"))
+    m = store.read_manifest()
+    assert m["pending_compactions"] == []
+    assert [c["compact_id"] for c in m["compactions"]] == ["pending"]
     after = gated_pdf(eng.read_tier("30m"))
     np.testing.assert_array_equal(before["n_vals"].values, after["n_vals"].values)
 
