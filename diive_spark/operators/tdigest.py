@@ -217,9 +217,12 @@ class TDigestPartials:
         ]
 
     def merge_exprs(self):
+        # a lone digest is kept as stored: re-compression is not the identity
         return [
-            _compress_udf(self.delta)(
-                F.sort_array(F.flatten(F.collect_list("td")))
+            F.when(F.count(F.lit(1)) == 1, F.first("td")).otherwise(
+                _compress_udf(self.delta)(
+                    F.sort_array(F.flatten(F.collect_list("td")))
+                )
             ).alias("td"),
             F.sum("pcount").cast("long").alias("pcount"),
         ]

@@ -6,27 +6,30 @@ specs prove it on KERNEL aggregates — partial state that no built-in Spark
 aggregate can express.  A kernel spec supplies ``partial_frame`` /
 ``merge_frame`` (applyInPandas grouped transforms over the same
 (key, window_end_s[, window_day]) grouping the Column path uses); everything
-else in the engine — lineage manifest, intent-log resume, partition-scoped
-swap, expiry, physical compaction — is aggregate-agnostic and untouched.
+else in the engine — lineage manifest, intent-log resume, append, expiry,
+compaction — is aggregate-agnostic and untouched.
 
 Determinism contract (what the merged==direct test pins rely on):
 
 * partial state is built from rows sorted by (ts, value) — insertion order
   is defined, so the same batch always yields the same sketch;
-* a merge call canonically orders its input states (by count, then by the
-  serialized state) before folding left, so one merge is a deterministic
-  function of the state multiset;
-* the engine's state after a given batch SEQUENCE is therefore bit-equal to
-  a direct Python fold of the same per-batch states in the same sequence
-  (pinned in tests/test_sketch_tiers.py).  Bit-identity across DIFFERENT
-  batch orders is not claimed — KLL/FD merges are not bitwise commutative;
-  what survives any merge tree is the sketch guarantee itself (KLL rank
-  error, Karnin-Lang-Liberty FOCS'16; FD covariance bound 2*||A||_F^2/ell,
+* ``merge_frame`` folds a (key, window)'s stored states in write order
+  (the engine's ``<seq>`` file prefix), one pair at a time; a pair merge
+  canonically orders its two states (by count, then by the serialized
+  state), so it is a deterministic function of the pair; a lone state is
+  returned unmerged;
+* the engine's state after a given batch SEQUENCE — folded at read or at
+  compaction — is therefore bit-equal to a direct Python fold of the same
+  per-batch states in the same sequence (pinned in
+  tests/test_sketch_tiers.py).  Bit-identity across DIFFERENT batch orders
+  is not claimed — KLL/FD merges are not bitwise commutative; what survives
+  any merge tree is the sketch guarantee itself (KLL rank error,
+  Karnin-Lang-Liberty FOCS'16; FD covariance bound 2*||A||_F^2/ell,
   Liberty KDD'13 / Ghashami et al. SIAM J. Comp. 2016), also pinned.
 
 Scale shape: identical to SumCount/M4 tiers — one combinable kernel agg per
-batch, merge reads only touched day partitions, state per (key, window) is
-O(k) / O(ell*d) regardless of row count.
+batch, a batch appends without reading live days, state per (key, window)
+is O(k) / O(ell*d) regardless of row count.
 """
 
 from __future__ import annotations
@@ -45,6 +48,16 @@ from diive_spark.operators.sketches2 import (
 )
 
 __all__ = ["KLLPartials", "FDPartials"]
+
+
+def _in_order(states: list[tuple], merge2):
+    """Fold stored states in write order, one pair merge at a time: the
+    state a sequence of per-batch merges would have stored.  A lone state
+    is returned unmerged (a sketch's re-compression is not the identity)."""
+    acc = states[0]
+    for st in states[1:]:
+        acc = merge2(acc, st)
+    return acc
 
 
 def _group_schema(df: DataFrame, cols: list[str], state_ddl: str) -> str:
@@ -120,7 +133,9 @@ class KLLPartials:
 
         return df.groupBy(*group).applyInPandas(apply, schema=schema)
 
-    def merge_frame(self, df: DataFrame, group_cols: list[str]) -> DataFrame:
+    def merge_frame(
+        self, df: DataFrame, group_cols: list[str], order_col: str
+    ) -> DataFrame:
         k = self.k
         schema = _group_schema(df, group_cols, self._STATE_DDL)
 
@@ -128,10 +143,11 @@ class KLLPartials:
             states = [
                 (int(r.kll_n), int(r.kll_flips),
                  [list(lv) for lv in r.kll_levels])
-                for r in pdf.itertuples()
+                for r in pdf.sort_values(order_col, kind="mergesort").itertuples()
             ]
-            sk = kll_canonical_fold(k, states)
-            n, flips, levels = _kll_to_cols(sk)
+            n, flips, levels = _in_order(
+                states, lambda a, b: _kll_to_cols(kll_canonical_fold(k, [a, b]))
+            )
             row = {c: [pdf[c].iloc[0]] for c in group_cols}
             row.update(
                 {"kll_n": [n], "kll_flips": [flips], "kll_levels": [levels]}
@@ -241,17 +257,23 @@ class FDPartials:
 
         return df.groupBy(*group).applyInPandas(apply, schema=schema)
 
-    def merge_frame(self, df: DataFrame, group_cols: list[str]) -> DataFrame:
+    def merge_frame(
+        self, df: DataFrame, group_cols: list[str], order_col: str
+    ) -> DataFrame:
         ell = self.ell
         schema = _group_schema(df, group_cols, self._STATE_DDL)
+
+        def fold(a, b):
+            n, fro2, m = fd_canonical_fold(ell, [a, b])
+            return n, fro2, [list(map(float, r_)) for r_ in m]
 
         def apply(pdf: pd.DataFrame) -> pd.DataFrame:
             states = [
                 (int(r.fd_n), float(r.fd_fro2),
                  [list(x) for x in r.fd_b])
-                for r in pdf.itertuples()
+                for r in pdf.sort_values(order_col, kind="mergesort").itertuples()
             ]
-            n, fro2, b = fd_canonical_fold(ell, states)
+            n, fro2, b = _in_order(states, fold)
             row = {c: [pdf[c].iloc[0]] for c in group_cols}
             row.update(
                 {

@@ -1,4 +1,4 @@
-"""Continuous-aggregate tier engine: incremental partition-scoped merge,
+"""Continuous-aggregate tier engine: merge-on-read partial aggregates,
 lineage manifest, idempotent crash resume, compaction and expiry.
 
 Reference analog: diive's multi-tier resample family
@@ -7,34 +7,38 @@ file-at-a-time merge (``filereader.py``).  The reference recomputes
 everything per run; this engine is INCREMENTAL:
 
   * Tier tables store PARTIAL aggregates per (key, window), by default
-    ``(psum, pcount, pslots)``.  Late or new source rows aggregate into
-    deltas that MERGE by summation — associative and commutative, so any
-    batch order yields the same tables (mean = psum/pcount recomposed after
-    the merge, the min-count gate re-evaluated over merged counts at read
-    time, exactly like the reference re-running resample).  Other
-    mergeable summaries (M4 tuples, t-digests, KLL / Frequent-Directions
-    sketches) plug in as partial specs.
+    ``(psum, pcount, pslots)``.  Partials merge by summation — associative
+    and commutative, so any batch order yields the same tables (mean =
+    psum/pcount recomposed after the merge, the min-count gate evaluated
+    over merged counts at read time, exactly like the reference re-running
+    resample).  Other mergeable summaries (M4 tuples, t-digests, KLL /
+    Frequent-Directions sketches) plug in as partial specs.
+  * Merge-on-read (Iceberg's merge-on-read ``MERGE INTO``): a batch never
+    rewrites a live day.  Its own partials, folded to one row per
+    (tier, key, window), are APPENDED as new files named by the batch.
+    Reads fold the rows of a (key, window) that several batches appended;
+    compaction folds a day's files into one.
   * One partial pass per batch, shared across tiers (the sub-aggregate
     sharing of *Factor Windows*, ICDE 2022): the finest tier's partials are
     computed once, and each coarser nested tier's delta is those rows
-    relabelled to its own window, summed by the merge.  One Spark action
-    finds every tier's affected days.
-  * One staged write per batch: every tier's delta and live affected days
-    go through one exchange, one merge and one parquet write partitioned
-    by (tier, window_day); each tier's subtree then moves into that tier's
-    staging dir.  Staged row counts, the watermark and the snapshot
-    summary come from the staged files' footers and listing.
+    relabelled to its own window and folded.
+  * One staged write per batch for every tier, partitioned by
+    (tier, window_day): the finest tier's day stays spread over the
+    partial pass's tasks, and each coarser tier's day is written as one
+    file.  The affected days, row counts, watermark and snapshot summary
+    come from the staged listing and footers (no Spark job).
   * Storage: one partitioned parquet table per tier
-    (``<root>/<tier>/data/window_day=YYYY-MM-DD/``) plus a snapshot/lineage
-    manifest — the Iceberg semantics of ``MERGE INTO`` with dynamic
-    partition overwrite, snapshot summary properties and
-    ``expire_snapshots``.
+    (``<root>/<tier>/data/window_day=YYYY-MM-DD/<seq>-<batch_id>-part-*``)
+    plus a snapshot/lineage manifest.  ``<seq>`` orders the writes of a
+    tier (batches and compactions); files of one write never repeat a
+    (key, window), so a day whose files share one ``<seq>`` is read
+    without a fold.
   * Lineage: every applied source batch records (batch_id, rows,
-    per-partition row counts, watermark, summary) in each tier's manifest;
+    per-partition stored rows, watermark, summary) in each tier's manifest;
     re-applying a recorded batch_id is a no-op, and a pending intent lets a
-    killed run resume without merging twice.
+    killed run resume without appending twice.
   * Expiry drops whole day partitions older than a cutoff, recorded in the
-    manifest.
+    manifest; a late batch never re-creates an expired day.
 """
 
 from __future__ import annotations
@@ -56,7 +60,7 @@ from diive_spark.config import TierSpec
 
 PARTIALS = ["psum", "pcount", "pslots"]
 # snapshot-summary fields a pending intent carries from staging to commit
-SUMMARY_KEYS = ("added_files", "added_bytes", "removed_files", "stage_s")
+SUMMARY_KEYS = ("added_files", "added_bytes", "removed_files", "late_dropped", "stage_s")
 
 
 # The label expressions below are SQL text: apply_batch builds them for every
@@ -79,30 +83,57 @@ def _relabel(base: TierSpec, tier: TierSpec) -> str:
     return f"({start} - pmod({start}, {tier.seconds}) + {tier.seconds})"
 
 
-def _footer_stats(staging: Path) -> dict:
+def _seq(data_file: Path) -> str:
+    """The write (``<seq>`` name prefix) a live data file belongs to."""
+    return data_file.name.split("-", 1)[0]
+
+
+def _data_files(day_dir: Path) -> list[Path]:
+    return sorted(day_dir.glob("*.parquet"))
+
+
+def _move(src: Path, dst_dir: Path, name: str) -> None:
+    """Move a data file and its checksum sidecar to ``dst_dir/name``."""
+    crc = src.with_name(f".{src.name}.crc")
+    if crc.exists():
+        os.replace(crc, dst_dir / f".{name}.crc")
+    os.replace(src, dst_dir / name)
+
+
+def _footer_stats(staging: Path, cutoff: str | None = None) -> dict:
     """Per-day row counts, the max ``window_end_s`` and the number and
     bytes of the data files of a staged write, read from the parquet
-    footers and the directory listing (no Spark job)."""
+    footers and the directory listing (no Spark job).  Days before
+    ``cutoff`` (expired) are deleted from staging; their rows are counted
+    as ``late_dropped``."""
     counts: dict[str, int] = {}
     watermark = None
-    files = size = 0
-    for f in sorted(staging.glob("window_day=*/*.parquet")):
-        day = f.parent.name.split("=", 1)[1]
-        meta = pq.read_metadata(f)
-        counts[day] = counts.get(day, 0) + meta.num_rows
-        files += 1
-        size += f.stat().st_size
-        paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
-        j = paths.index("window_end_s")
-        for i in range(meta.num_row_groups):
-            stats = meta.row_group(i).column(j).statistics
-            if stats is not None and stats.has_min_max:
-                watermark = stats.max if watermark is None else max(watermark, stats.max)
+    files = size = dropped = 0
+    for day_dir in sorted(staging.glob("window_day=*")):
+        day = day_dir.name.split("=", 1)[1]
+        for f in _data_files(day_dir):
+            meta = pq.read_metadata(f)
+            if cutoff is not None and day < cutoff:
+                dropped += meta.num_rows
+                continue
+            counts[day] = counts.get(day, 0) + meta.num_rows
+            files += 1
+            size += f.stat().st_size
+            paths = [meta.schema.column(j).path for j in range(meta.num_columns)]
+            j = paths.index("window_end_s")
+            for i in range(meta.num_row_groups):
+                stats = meta.row_group(i).column(j).statistics
+                if stats is not None and stats.has_min_max:
+                    watermark = stats.max if watermark is None else max(watermark, stats.max)
+        if cutoff is not None and day < cutoff:
+            shutil.rmtree(day_dir)
     return {
+        "affected_days": sorted(counts),
         "staged_rows": counts,
         "watermark_s": watermark,
         "added_files": files,
         "added_bytes": size,
+        "late_dropped": dropped,
     }
 
 
@@ -113,10 +144,13 @@ class SumCountPartials:
 
     A spec supplies the tier engine's two aggregate stages (delta partials
     and merge) plus how to present merged rows; everything else — lineage,
-    intent-log resume, partition-scoped swap, expiry, compaction — is
+    intent-log resume, append, fold-on-read, expiry, compaction — is
     aggregate-agnostic, so new mergeable summaries (M4 tuples below; the
     histogram/HLL/CMS sketches run standalone today) ride the same
-    machinery.
+    machinery.  A merge must return a lone row unchanged: reads and
+    compaction fold every (key, window) of a day that holds several
+    writes, most of which have one row.  A sum is exact on one row (a
+    partial sum is never ``-0.0``).
     """
 
     columns = tuple(PARTIALS)
@@ -181,13 +215,18 @@ class TierStore:
 
     Layout::
 
-        root/<tier>/data/window_day=YYYY-MM-DD/*.parquet
+        root/<tier>/data/window_day=YYYY-MM-DD/<seq>-<tag>-part-*.parquet
         root/<tier>/_lineage.json
+
+    ``<seq>`` numbers the tier's writes (batch appends and compactions) in
+    commit order; ``<tag>`` is the batch id or ``compact_<id>``.
     """
 
-    def __init__(self, root: str, tier: TierSpec):
+    def __init__(self, root: str, tier: TierSpec, partials, key_col: str):
         self.root = Path(root) / tier.name
         self.tier = tier
+        self.partials = partials
+        self.key_col = key_col
         self.data_dir = self.root / "data"
         self.manifest_path = self.root / "_lineage.json"
 
@@ -203,14 +242,51 @@ class TierStore:
         tmp.write_text(json.dumps(manifest, indent=1))
         os.replace(tmp, self.manifest_path)  # atomic
 
+    @staticmethod
+    def next_seq(manifest: dict) -> int:
+        """Take the tier's next write number (persisted with the intent)."""
+        manifest["seq"] = manifest.get("seq", 0) + 1
+        return manifest["seq"]
+
     # -- data --------------------------------------------------------------
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        if not self.data_dir.exists() or not any(self.data_dir.iterdir()):
-            return None
-        df = spark.read.parquet(str(self.data_dir))
+    def read(self, spark: SparkSession, days: list[str] | None = None) -> DataFrame | None:
+        """The tier's partials (of ``days``, default all), folded to one
+        row per (key, window).
+
+        A day whose files all come from one write holds each (key, window)
+        once and is read as stored; the other days are folded with the
+        spec's merge (``merge_exprs``, or ``merge_frame`` in write order
+        for a kernel spec, so a fold equals the merges one batch at a time
+        would have made)."""
+        clean, mixed = [], []
+        for day in self.partitions() if days is None else days:
+            files = self.files(day)
+            if files:
+                writes = {_seq(f) for f in files}
+                (mixed if len(writes) > 1 else clean).append(
+                    str(self.data_dir / f"window_day={day}")
+                )
+        frames = []
+        if clean:
+            frames.append(self._scan(spark, clean))
+        if mixed:
+            frames.append(self._fold(self._scan(spark, mixed)))
+        return functools.reduce(DataFrame.unionByName, frames) if frames else None
+
+    def _scan(self, spark: SparkSession, paths: list[str]) -> DataFrame:
+        df = spark.read.option("basePath", str(self.data_dir)).parquet(*paths)
         # partition-column type inference reads window_day back as DATE;
         # normalize to the string form used by the writer and the manifest
         return df.withColumn("window_day", F.col("window_day").cast("string"))
+
+    def _fold(self, df: DataFrame) -> DataFrame:
+        group = [self.key_col, "window_end_s", "window_day"]
+        if hasattr(self.partials, "merge_frame"):
+            seq = F.regexp_extract(F.col("_metadata.file_name"), r"^(\d+)-", 1)
+            return self.partials.merge_frame(
+                df.withColumn("_seq", seq.cast("long")), group, "_seq"
+            )
+        return df.groupBy(*group).agg(*self.partials.merge_exprs())
 
     def partitions(self) -> list[str]:
         if not self.data_dir.exists():
@@ -220,6 +296,10 @@ class TierStore:
             for p in self.data_dir.iterdir()
             if p.is_dir() and p.name.startswith("window_day=")
         )
+
+    def files(self, day: str) -> list[Path]:
+        """The data files of one live day."""
+        return _data_files(self.data_dir / f"window_day={day}")
 
 
 class TierEngine:
@@ -239,7 +319,6 @@ class TierEngine:
         self.spark = spark
         self.root = Path(root)
         self.tiers = tiers
-        self.stores = {t.name: TierStore(root, t) for t in tiers}
         self.key_col = key_col
         self.ts_col = ts_col
         self.value_col = value_col
@@ -247,6 +326,7 @@ class TierEngine:
         # pluggable mergeable-aggregate spec; default = reference-shaped
         # sum/count partials (see SumCountPartials)
         self.partials = partials or SumCountPartials()
+        self.stores = {t.name: TierStore(root, t, self.partials, key_col) for t in tiers}
 
     # -- partial aggregation -------------------------------------------------
     def _window_end(self, tier: TierSpec) -> str:
@@ -269,7 +349,7 @@ class TierEngine:
         ``plans/sketch_partials.py``) instead supply ``partial_frame``, an
         applyInPandas grouped transform over the same (key, window_end_s)
         grouping — the rest of the engine (lineage, intent-log resume,
-        partition-scoped swap, expiry, compaction) is unchanged either way.
+        append, fold, expiry, compaction) is unchanged either way.
         """
         base = df.selectExpr(
             "*",
@@ -290,54 +370,38 @@ class TierEngine:
 
     # -- incremental apply ----------------------------------------------------
     def apply_batch(self, source: DataFrame, batch_id: str | None = None) -> dict:
-        """MERGE one source batch into every tier — PARTITION-SCOPED, with
-        one partial pass and one staged write shared by all tiers.
+        """APPEND one source batch's partials to every tier — merge-on-read,
+        with one partial pass and one staged write shared by all tiers.
 
-        Only the batch's ``affected_days`` partitions are merged, staged
-        and swapped; untouched ``window_day=`` directories stay in place
-        on disk.  Iceberg analog: ``MERGE INTO`` with dynamic partition
-        overwrite.
+        A batch never reads or rewrites a live day: the merge happens when
+        a day is read (:meth:`read_tier`) or compacted (:meth:`compact`).
+        Iceberg analog: ``MERGE INTO`` in merge-on-read mode.
 
         Each tier's manifest is read once and decides that tier's mode:
         *skip* (batch_id already in ``snapshots``), *replay* (batch_id in
         ``pending``) or *fresh*.  Every fresh tier is staged by ONE plan
-        and ONE parquet write (:meth:`_stage`):
-
-        * one Spark action (a ``collect_set`` of each tier's window ends
-          over the source) yields every fresh tier's affected days;
-        * one partial pass: ``_partials(source, base)`` with ``base`` the
-          finest fresh tier.  A coarser tier whose width is a multiple of
-          ``base``'s takes the base rows relabelled to its own
-          ``window_end_s``/``window_day`` as its delta; the merge sums
-          them.  Widths nest and the END→MIDDLE shift precedes bucketing,
-          so every base window lies in exactly one coarse window: counts
-          stay exact, sums change only in float association.  A width
-          that does not nest, and a kernel spec (``partial_frame``),
-          computes its delta from the source through ``_partials``;
-        * every tier's live affected days (read by explicit path with the
-          delta's schema) and delta are tagged with a literal ``tier``
-          column and unioned; one merge (whose exchange also spreads each
-          day's rows over tasks by key) and one
-          ``partitionBy("tier", "window_day")`` write stage them all
-          under ``<root>/_staging_<batch_id>``, and each ``tier=<name>``
-          subtree then moves to ``<root>/<name>/_staging_<batch_id>``;
-        * staged row counts, the watermark and the added files/bytes come
-          from the staged files' parquet footers, not from a Spark
-          read-back.
+        and ONE parquet write (:meth:`_stage`) under
+        ``<root>/_staging_<batch_id>``, whose ``tier=<name>`` subtrees then
+        move to ``<root>/<name>/_staging_<batch_id>``.  The affected days,
+        per-day row counts, watermark and added files/bytes come from that
+        staging listing and the parquet footers, not from a Spark job.
 
         From the moved staging dir on, crash safety is an intent log per
         tier:
 
-        1. record a ``pending`` intent (batch_id, days, staged counts,
-           watermark, snapshot summary) in the manifest;
-        2. swap each staged day directory into the live table;
+        1. drop staged days before the tier's latest expiry cutoff (their
+           rows are counted in the summary's ``late_dropped``), then record
+           a ``pending`` intent (batch_id, write number ``seq``, days,
+           staged counts, watermark, snapshot summary) in the manifest;
+        2. move each staged data file into its live day as
+           ``<seq>-<batch_id>-<name>``;
         3. commit the snapshot record and clear the intent.
 
-        A replayed tier finishes its swaps FROM STAGING without
-        recomputing — recomputing would re-read already-swapped days and
-        double-merge the delta.  A staging dir with no intent record (the
-        shared one, or a fresh tier's) is a pre-intent crash leftover:
-        discarded on entry and recomputed from unchanged live data.
+        A replayed tier moves the files still in staging: a file already
+        moved is gone from there, so each file is moved exactly once.  A
+        staging dir with no intent record (the shared one, or a fresh
+        tier's) is a pre-intent crash leftover: discarded on entry and
+        recomputed.
         """
         batch_id = batch_id or uuid.uuid4().hex
         shared = self.root / f"_staging_{batch_id}"
@@ -359,114 +423,88 @@ class TierEngine:
         fresh = [t for t in self.tiers if t.name in intents and intents[t.name] is None]
         if fresh:
             t0 = time.perf_counter()
-            days = self._stage(source, fresh, batch_id)
+            self._stage(source, fresh, batch_id)
             stage_s = time.perf_counter() - t0
         for tier in self.tiers:
             if tier.name not in manifests:
                 continue
             store, manifest = self.stores[tier.name], manifests[tier.name]
+            staging = store.root / f"_staging_{batch_id}"
             intent = intents[tier.name]
             if intent is None:
-                affected = days[tier.name]
+                cutoff = max((e["cutoff"] for e in manifest["expired"]), default=None)
                 intent = {
                     "batch_id": batch_id,
-                    "affected_days": affected,
-                    **_footer_stats(store.root / f"_staging_{batch_id}"),
-                    "removed_files": sum(
-                        1
-                        for d in affected
-                        for _ in (store.data_dir / f"window_day={d}").glob("*.parquet")
-                    ),
+                    "seq": store.next_seq(manifest),
+                    **_footer_stats(staging, cutoff),
+                    "removed_files": 0,
                     "stage_s": stage_s,
                 }
                 manifest.setdefault("pending", []).append(intent)
                 store.write_manifest(manifest)
             t0 = time.perf_counter()
-            self._swap_days(store, batch_id, intent["affected_days"])
+            prefix = f"{intent['seq']:08d}-{batch_id}"
+            for day in intent["affected_days"]:
+                live = store.data_dir / f"window_day={day}"
+                live.mkdir(parents=True, exist_ok=True)
+                for f in _data_files(staging / f"window_day={day}"):
+                    _move(f, live, f"{prefix}-{f.name}")
+            shutil.rmtree(staging, ignore_errors=True)
             metrics[tier.name] = self._commit(
                 store, manifest, intent, time.perf_counter() - t0
             )
         return metrics
 
-    def _stage(self, source: DataFrame, fresh: list, batch_id: str) -> dict:
-        """Merge every fresh tier's delta into its live affected days with
-        one plan and one parquet write, then move each tier's subtree of
-        the write to ``<root>/<tier>/_staging_<batch_id>``; returns each
-        tier's sorted affected days."""
-        # collect the distinct window ends (integers) and label only those
-        row = source.selectExpr(
-            *[
-                f"transform(collect_set({self._window_end(t)}), w -> {_window_day('w')})"
-                for t in fresh
-            ]
-        ).first()
-        days = {t.name: sorted(set(row[i])) for i, t in enumerate(fresh)}
+    def _stage(self, source: DataFrame, fresh: list, batch_id: str) -> None:
+        """Write every fresh tier's partials of ``source`` with one plan and
+        one parquet write, then move each tier's subtree of the write to
+        ``<root>/<tier>/_staging_<batch_id>``.
+
+        One partial pass (``_partials(source, base)``, ``base`` the finest
+        fresh tier) is one row per (key, window) and is written as is,
+        spread over the pass's tasks.  A coarser tier whose width is a
+        multiple of ``base``'s takes the base rows relabelled to its own
+        ``window_end_s``/``window_day``, folded by the spec's merge.  Widths
+        nest and the END→MIDDLE shift precedes bucketing, so every base
+        window lies in exactly one coarse window: counts stay exact, sums
+        change only in float association.  A width that does not nest, and
+        a kernel spec (``partial_frame``), computes its partials from the
+        source.  Every coarser tier's rows are hashed on (tier, day) alone,
+        so each of its days is written by one task, as one file."""
         base_tier = min(fresh, key=lambda t: t.seconds)
         base = self._partials(source, base_tier)
         kernel = hasattr(self.partials, "partial_frame")
-        merge, keep = [], []
+
+        def tagged(frame: DataFrame, tier: TierSpec) -> DataFrame:
+            return frame.selectExpr(f"'{tier.name}' AS tier", *[f"`{c}`" for c in frame.columns])
+
+        relabelled, own = [], []
         for tier in fresh:
-            # a relabelled delta holds several rows per (key, window), so it
-            # needs the merge even when no live day is touched
-            relabel = (
-                tier is not base_tier
-                and tier.seconds % base_tier.seconds == 0
-                and not kernel
-            )
             if tier is base_tier:
-                delta = base
-            elif relabel:
+                continue
+            if tier.seconds % base_tier.seconds == 0 and not kernel:
                 wend = _relabel(base_tier, tier)
-                relabelled = {"window_end_s": wend, "window_day": _window_day(wend)}
-                delta = base.selectExpr(
-                    *[f"{relabelled.get(c, f'`{c}`')} AS `{c}`" for c in base.columns]
-                )
+                label = {"window_end_s": wend, "window_day": _window_day(wend)}
+                relabelled.append(tagged(base.selectExpr(
+                    *[f"{label.get(c, f'`{c}`')} AS `{c}`" for c in base.columns]
+                ), tier))
             else:
-                delta = self._partials(source, tier)
-            store = self.stores[tier.name]
-            # read ONLY the touched day directories — explicit paths, so
-            # pruning cannot be defeated by the date->string cast
-            live_paths = [
-                str(store.data_dir / f"window_day={d}")
-                for d in days[tier.name]
-                if (store.data_dir / f"window_day={d}").exists()
-            ]
-            frame = delta
-            if live_paths:
-                frame = (
-                    self.spark.read.schema(delta.schema)
-                    .option("basePath", str(store.data_dir))
-                    .parquet(*live_paths)
-                    .unionByName(delta)
-                )
-            tagged = frame.selectExpr(
-                f"'{tier.name}' AS tier", *[f"`{c}`" for c in frame.columns]
-            )
-            # rows with no live day and no relabel skip the merge, so a spec
-            # whose merge is not the identity on one row (t-digest
-            # re-compression) stores them exactly as the partial pass made them
-            (merge if live_paths or relabel else keep).append(tagged)
-        # Staged rows are hashed on their key as well as their (tier, day):
-        # (tier, day) alone would funnel a whole day into a single task and a
-        # single giant file, where this keeps day writes parallel (the writer
-        # still splits per-tier, per-day directories via partitionBy; cold
-        # days re-coalesce via compact()).  For merged rows that is the
-        # merge's own exchange, after a map-side partial merge that folds a
-        # relabelled delta's many rows per coarse window; rows that skip the
-        # merge get the same spread from one repartition.
-        staged = []
-        if merge:
-            frame = functools.reduce(DataFrame.unionByName, merge)
+                own.append(tagged(self._partials(source, tier), tier))
+        staged = [tagged(base, base_tier)]
+        # the fold runs on the (tier, day) exchange: a partitioning on a
+        # subset of its group satisfies the aggregate, so there is no second
+        # exchange
+        if relabelled:
+            frame = functools.reduce(DataFrame.unionByName, relabelled)
             group = ["tier", self.key_col, "window_end_s", "window_day"]
-            if hasattr(self.partials, "merge_frame"):
-                staged.append(self.partials.merge_frame(frame, group))
-            else:
-                staged.append(frame.groupBy(*group).agg(*self.partials.merge_exprs()))
-        if keep:
             staged.append(
-                functools.reduce(DataFrame.unionByName, keep).repartition(
-                    "tier", "window_day", self.key_col
-                )
+                frame.repartition("tier", "window_day")
+                .groupBy(*group)
+                .agg(*self.partials.merge_exprs())
+            )
+        if own:
+            staged.append(
+                functools.reduce(DataFrame.unionByName, own).repartition("tier", "window_day")
             )
         shared = self.root / f"_staging_{batch_id}"
         functools.reduce(DataFrame.unionByName, staged).write.mode(
@@ -482,23 +520,25 @@ class TierEngine:
                 store.root.mkdir(parents=True, exist_ok=True)
                 os.replace(subtree, staging)
         shutil.rmtree(shared)
-        return days
 
     def _commit(
-        self, store: TierStore, manifest: dict, intent: dict, swap_s: float
+        self, store: TierStore, manifest: dict, intent: dict, move_s: float
     ) -> dict:
-        """Append the snapshot record for a swapped intent and clear it:
-        staged per-day counts fold into the previous snapshot's
-        partition_rows (untouched partitions are not re-read).
+        """Append the snapshot record for a moved intent and clear it:
+        staged per-day counts add to the previous snapshot's
+        ``partition_rows`` (untouched partitions are not re-read).
+        ``partition_rows`` counts STORED rows, unfolded: a (key, window)
+        that two batches appended counts twice until compaction folds it.
 
         The snapshot's ``summary`` (Iceberg analog: snapshot summary
-        properties) holds the data files and bytes the batch added and the
-        files it swapped out, all counted from the staging listing and the
-        footers, plus the staging and swap wall times; it costs no Spark
-        job."""
+        properties) holds the data files and bytes the batch added (an
+        append removes none), the late rows dropped for expired days, and
+        the staging and move wall times; it costs no Spark job."""
         batch_id, affected_days = intent["batch_id"], intent["affected_days"]
         prev = manifest["snapshots"][-1]["partition_rows"] if manifest["snapshots"] else {}
-        part_counts = {**prev, **intent["staged_rows"]}
+        part_counts = dict(prev)
+        for day, n in intent["staged_rows"].items():
+            part_counts[day] = part_counts.get(day, 0) + n
         live_days = set(store.partitions())
         part_counts = {d: c for d, c in part_counts.items() if d in live_days}
         snap = {
@@ -508,13 +548,13 @@ class TierEngine:
             "rows": sum(part_counts.values()),
             "partition_rows": part_counts,
             "merged_partitions": affected_days,
-            # high-water mark of merged window ends — the "resume reading
+            # high-water mark of appended window ends — the "resume reading
             # the source from here" cursor (Iceberg analog: a snapshot
             # summary property)
             "watermark_s": intent.get("watermark_s"),
             "summary": {
                 **{k: intent.get(k) for k in SUMMARY_KEYS},
-                "swap_s": swap_s,
+                "move_s": move_s,
             },
         }
         manifest["snapshots"].append(snap)
@@ -561,7 +601,11 @@ class TierEngine:
     ) -> DataFrame:
         """Tier as the reference-shaped output: (key, window_end_s, agg_mean,
         agg_sum, n_vals), min-count gate evaluated over the MERGED counts —
-        identical to running the reference resample over all data at once."""
+        identical to running the reference resample over all data at once.
+
+        The stored rows are first folded per (key, ``window_end_s``) with
+        the spec's merge (:meth:`TierStore.read`); a day written by one
+        batch or one compaction is read without the fold."""
         store = self.stores[name]
         df = store.read(self.spark)
         if df is None:
@@ -602,22 +646,25 @@ class TierEngine:
         target_files: int = 1,
         days: list[str] | None = None,
     ) -> list[str]:
-        """Small-file compaction (Iceberg ``rewrite_data_files`` analog).
+        """The fold of merge-on-read storage (Iceberg ``rewrite_data_files``
+        analog), for any tier.
 
-        Parallel day writes and streamed micro-batches leave day partitions
-        with one file per writing task; at crawl scale a cold day holding
-        hundreds of small files costs a scan task per file forever after.
-        Rewrites every day partition holding more than ``max_files_per_day``
-        data files down to ``target_files``, purely physical (row content
-        unchanged — asserted in tests/test_tiers.py).
+        Every batch appends files to the days it touches, so a day's files
+        and its repeated (key, window) rows grow until compaction.  Rewrites
+        every day partition holding more than ``max_files_per_day`` data
+        files down to ``target_files``, folded to one row per (key, window)
+        by the same fold a read applies (:meth:`TierStore.read`), so
+        :meth:`read_tier` output is unchanged (asserted in
+        tests/test_tiers.py).  The rewrite takes the tier's next write
+        number, so later appends fold after it.
 
-        Crash-safe like :meth:`apply_batch`: the rewritten days are fully
-        staged, an intent is recorded, then each day is swapped
-        live→trash→staged; a pending compaction found on entry is replayed
-        from staging first.  Re-running compact on an already-compacted day
-        is a no-op (its file count is at or under the threshold).  A staging
-        dir that no pending intent names was left by a crash while staging;
-        it is swept on entry.
+        Crash-safe: the rewritten days are fully staged, an intent is
+        recorded, then each day is swapped live→trash→staged; a pending
+        compaction found on entry is replayed from staging first.
+        Re-running compact on an already-compacted day is a no-op (its file
+        count is at or under the threshold).  A staging dir that no pending
+        intent names was left by a crash while staging; it is swept on
+        entry.
         """
         store = self.stores[name]
 
@@ -629,40 +676,52 @@ class TierEngine:
         for leftover in store.root.glob("_staging_compact_*"):
             shutil.rmtree(leftover)
 
-        victims = []
-        for day in days or store.partitions():
-            day_dir = store.data_dir / f"window_day={day}"
-            n_files = sum(1 for f in day_dir.glob("*.parquet"))
-            if n_files > max_files_per_day:
-                victims.append(day)
+        victims = [
+            day for day in days or store.partitions()
+            if len(store.files(day)) > max_files_per_day
+        ]
         if not victims:
             return []
 
         compact_id = uuid.uuid4().hex
         staging = store.root / f"_staging_compact_{compact_id}"
+        manifest = store.read_manifest()
+        seq = store.next_seq(manifest)
         for day in victims:
-            day_dir = store.data_dir / f"window_day={day}"
+            staged_day = staging / f"window_day={day}"
             (
-                self.spark.read.parquet(str(day_dir))
+                store.read(self.spark, [day])
+                .drop("window_day")
                 .coalesce(target_files)
                 .write.mode("overwrite")
-                .parquet(str(staging / f"window_day={day}"))
+                .parquet(str(staged_day))
             )
-        manifest = store.read_manifest()
-        intent = {"compact_id": compact_id, "days": victims}
+            for f in _data_files(staged_day):
+                _move(f, staged_day, f"{seq:08d}-compact_{compact_id}-{f.name}")
+        intent = {
+            "compact_id": compact_id,
+            "days": victims,
+            "staged_rows": _footer_stats(staging)["staged_rows"],
+        }
         manifest.setdefault("pending_compactions", []).append(intent)
         store.write_manifest(manifest)
         self._swap_compaction(store, intent)
         return victims
 
     def _swap_compaction(self, store: TierStore, intent: dict) -> None:
-        """Swap a fully-staged compaction into the live table and commit."""
+        """Swap a fully-staged compaction into the live table and commit:
+        the latest snapshot's ``partition_rows`` takes the folded days'
+        stored row counts."""
         compact_id, days = intent["compact_id"], intent["days"]
         self._swap_days(store, f"compact_{compact_id}", days)
         manifest = store.read_manifest()
         manifest.setdefault("compactions", []).append(
             {"at": time.time(), "compact_id": compact_id, "partitions": days}
         )
+        if manifest["snapshots"]:
+            head = manifest["snapshots"][-1]
+            head["partition_rows"].update(intent.get("staged_rows", {}))
+            head["rows"] = sum(head["partition_rows"].values())
         manifest["pending_compactions"] = [
             p
             for p in manifest.get("pending_compactions", [])
@@ -674,7 +733,8 @@ class TierEngine:
     def expire(self, name: str, keep_days: int, now_day: str) -> list[str]:
         """Drop partitions strictly older than ``now_day - keep_days``
         (partition-level delete, recorded in lineage — Iceberg analog:
-        ``DELETE WHERE window_day < cutoff`` + ``expire_snapshots``)."""
+        ``DELETE WHERE window_day < cutoff`` + ``expire_snapshots``).  Later
+        batches drop their rows for days before the latest cutoff."""
         import datetime as dt
 
         store = self.stores[name]

@@ -3,7 +3,18 @@
 All defaults are safe for both a local master and a large cluster: AQE
 (runtime re-planning + skew-join splitting), Arrow for pandas UDF
 transfer, UTC session time zone so timestamp semantics are deterministic,
-and one shuffle partition per core of the context's default parallelism.
+one shuffle partition per core of the context's default parallelism, and
+no DataFrame call-site capture.
+
+PySpark 4.1 wraps every Column function in call-site capture
+(``pyspark/errors/utils.py::_with_origin``): about 20 py4j calls per
+function, so ``F.col`` costs 25 calls and building ``add_qcf`` 629.
+``spark.python.sql.dataFrameDebugging.enabled=false`` turns it off; the
+cost is that an analysis error no longer names the Python line that built
+the failing expression.  The conf is static, and PySpark reads it once per
+process, at the first Column call: a session that already runs (the one
+``tune_session`` gets) turns the capture off through PySpark's cached
+copy of the flag.
 """
 
 from __future__ import annotations
@@ -11,6 +22,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# PySpark's per-Column-call call-site capture (see the module docstring)
+DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def _no_call_site_capture() -> None:
+    """Turn off call-site capture for this process, also under a session
+    created without ``DEBUGGING_CONF`` (a static conf, fixed at start)."""
+    import pyspark.errors.utils as origin
+
+    origin._enable_debugging_cache = False
 
 
 def get_spark(
@@ -39,6 +61,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
+        .config(DEBUGGING_CONF, "false")
     )
     if master is not None:
         builder = builder.master(master)
@@ -50,6 +73,7 @@ def get_spark(
     spark.sparkContext.setLogLevel("ERROR")
     # queries may run under a driver-provided session: enforce runtime confs
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _no_call_site_capture()
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         str(shuffle_partitions or spark.sparkContext.defaultParallelism),
@@ -59,8 +83,11 @@ def get_spark(
 
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally created session
-    (the correctness driver passes its own SparkSession to ``entry``)."""
+    (the correctness driver passes its own SparkSession to ``entry``),
+    and switch off DataFrame call-site capture (see the module
+    docstring)."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _no_call_site_capture()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     return spark

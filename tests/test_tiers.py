@@ -156,28 +156,30 @@ def test_resume_after_finest_tier_committed(spark, series_sdf, tmp_path, monkeyp
     assert_tiers_equal_oneshot(eng, series_sdf)
 
 
-def count_parquet_writes(monkeypatch):
-    """Record every ``DataFrameWriter.parquet`` call; returns the list of
-    written paths."""
+def count_parquet_writes(monkeypatch, cls=None):
+    """Record every ``DataFrameWriter.parquet`` call (or ``cls.parquet``,
+    e.g. the reader's); returns the list of first path arguments."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    paths, parquet = [], DataFrameWriter.parquet
+    cls = cls or DataFrameWriter
+    paths, parquet = [], cls.parquet
 
     def spy(self, path, *args, **kwargs):
         paths.append(path)
         return parquet(self, path, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    monkeypatch.setattr(cls, "parquet", spy)
     return paths
 
 
 def test_apply_batch_plan_shape(spark, series_sdf, tmp_path, monkeypatch):
-    """A 3-tier batch into live days shares its Spark work across tiers:
-    one affected-days action over the source (2 jobs), then one partial
-    pass, exchange, merge and parquet write for every tier together
-    (3 jobs).  That is 5 jobs, against 10 when each tier staged its own
-    merge and write and 30 when each tier also ran its own partials, day
-    list and staged read-back.  No persisted RDD outlives the batch."""
+    """A 3-tier batch into live days appends without reading them: one
+    partial pass, one (tier, day) exchange for the coarser tiers' fold and
+    one parquet write for every tier together — 3 jobs, against 5 when
+    the batch was merged into its live days (a days action, the live-day
+    read and the merge) and 30 when each tier also ran its own partials,
+    day list and staged read-back.  No live day is read and no persisted
+    RDD outlives the batch."""
     import pyspark.sql.functions as F
 
     eng = TierEngine(
@@ -189,6 +191,9 @@ def test_apply_batch_plan_shape(spark, series_sdf, tmp_path, monkeypatch):
     sc = spark.sparkContext
     persisted = set(sc._jsc.getPersistentRDDs().keys())
     writes = count_parquet_writes(monkeypatch)
+    from pyspark.sql.readwriter import DataFrameReader
+
+    reads = count_parquet_writes(monkeypatch, DataFrameReader)
     group = "test-apply-batch-plan-shape"
     sc.setJobGroup(group, "3-tier apply_batch into live days")
     try:
@@ -198,8 +203,9 @@ def test_apply_batch_plan_shape(spark, series_sdf, tmp_path, monkeypatch):
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert all(m[t.name]["merged_partitions"] > 0 for t in TIERS)
-    assert len(jobs) == 5, len(jobs)
+    assert len(jobs) == 3, len(jobs)
     assert writes == [str(tmp_path / "t9" / "_staging_b")]
+    assert reads == []
     assert set(sc._jsc.getPersistentRDDs().keys()) <= persisted
 
 
@@ -323,10 +329,167 @@ def test_shared_staging_crash_resume(spark, series_sdf, tmp_path, monkeypatch, p
     assert_tiers_equal_oneshot(eng, series_sdf)
 
 
+def data_files(store):
+    return sorted(p.name for p in store.data_dir.glob("window_day=*/*.parquet"))
+
+
+@pytest.mark.parametrize("k", [0, 1, 2])
+def test_crash_after_k_file_moves(spark, series_sdf, tmp_path, monkeypatch, k):
+    """Crash after ``k`` of the finest tier's staged files moved into its
+    live days (k = 0: right after the intent).  The replay moves the rest
+    exactly once — each tier holds its files from before plus exactly the
+    files its snapshot says were added — and every tier equals a one-shot
+    rollup."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    root = tmp_path / "tk"
+    eng = TierEngine(
+        spark, str(root), TIERS, "url", "ts", "value", source_freq_seconds=600
+    )
+    half = F.pmod(F.xxhash64("url", "ts"), 2)
+    eng.apply_batch(series_sdf.filter(half == 0), batch_id="a")
+    before = {t.name: data_files(eng.stores[t.name]) for t in TIERS}
+    real, moves = os.replace, []
+
+    def replace(src, dst):
+        if "/data/window_day=" in str(dst) and str(dst).endswith(".parquet"):
+            if len(moves) == k:
+                raise Crash(f"move {k + 1}")
+            moves.append(dst)
+        return real(src, dst)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(os, "replace", replace)
+        with pytest.raises(Crash):
+            eng.apply_batch(series_sdf.filter(half == 1), batch_id="b")
+    store = eng.stores["30m"]
+    assert [p["batch_id"] for p in store.read_manifest()["pending"]] == ["b"]
+    assert len(data_files(store)) == len(before["30m"]) + k
+
+    m = eng.apply_batch(series_sdf.filter(half == 1), batch_id="b")
+    assert staging_dirs(root) == []
+    for t in TIERS:
+        files = data_files(eng.stores[t.name])
+        assert len(files) == len(before[t.name]) + m[t.name]["added_files"]
+        assert set(before[t.name]) <= set(files)
+        man = eng.stores[t.name].read_manifest()
+        assert [s["batch_id"] for s in man["snapshots"]] == ["a", "b"]
+        assert man["pending"] == []
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+def test_coarse_day_one_file_per_batch(spark, series_sdf, tmp_path):
+    """Each batch writes a coarser tier's day as one file, while the
+    finest tier's day stays spread over the partial pass's tasks (AQE
+    partition coalescing is off, so the exchanges keep every partition)."""
+    import pyspark.sql.functions as F
+
+    eng = TierEngine(
+        spark, str(tmp_path / "tf"), TIERS, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    spark.conf.set(key, "false")
+    try:
+        for b in range(3):
+            before = {t.name: data_files(eng.stores[t.name]) for t in TIERS}
+            m = eng.apply_batch(
+                series_sdf.filter(F.pmod(F.xxhash64("url", "ts"), 3) == b),
+                batch_id=f"b{b}",
+            )
+            for t in TIERS:
+                new = set(data_files(eng.stores[t.name])) - set(before[t.name])
+                if t.name == "30m":
+                    assert len(new) > m["30m"]["merged_partitions"]
+                else:
+                    assert len(new) == m[t.name]["merged_partitions"] > 0
+    finally:
+        spark.conf.unset(key)
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
+def test_late_rows_do_not_recreate_expired_day(spark, series_sdf, tmp_path):
+    """Late rows for a day a tier has expired are dropped for that tier
+    only — the day is not re-created as a partial bucket — and counted as
+    the staged partial rows in the snapshot summary's ``late_dropped``."""
+    import pyspark.sql.functions as F
+
+    eng = TierEngine(
+        spark, str(tmp_path / "tl"), TIERS, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    eng.apply_batch(series_sdf, batch_id="all")
+    days = eng.stores["1h"].partitions()
+    assert eng.expire("1h", keep_days=0, now_day=days[1]) == days[:1]
+    kept = gated_pdf(eng.read_tier("1h", gated=False))
+
+    late = series_sdf.filter(
+        F.date_format("ts", "yyyy-MM-dd") == days[0]
+    ).orderBy("url", "ts").limit(5)
+    m = eng.apply_batch(late, batch_id="late")
+    assert eng.stores["1h"].partitions() == days[1:]
+    pd.testing.assert_frame_equal(gated_pdf(eng.read_tier("1h", gated=False)), kept)
+    pdf = late.toPandas()
+    # 1h window ends after the END->MIDDLE shift of half the 600 s step
+    ts_s = pdf["ts"].astype("int64") // 10**9
+    wend = ((ts_s - 300) // 3600 + 1) * 3600
+    assert m["1h"]["late_dropped"] == len(set(zip(pdf["url"], wend))) > 0
+    assert m["1h"]["merged_partitions"] == 0
+    # the tiers that keep the day take the late rows
+    both = series_sdf.unionByName(late)
+    for tier in (TIERS[0], TIERS[2]):
+        assert m[tier.name]["late_dropped"] == 0
+        got = gated_pdf(eng.read_tier(tier.name))
+        np.testing.assert_array_equal(
+            got["n_vals"].values, oneshot_pdf(both, tier)["n_vals"].values
+        )
+
+
+@pytest.mark.parametrize("name", ["1h", "1d"])
+def test_compaction_folds_coarse_tier(spark, series_sdf, tmp_path, name):
+    """compact() on a coarse tier whose days hold files of several batches
+    leaves one file per day, folded to one row per (key, window), and
+    keeps read_tier's output: n_vals exact, means to rtol 1e-12, and equal
+    to a one-shot rollup."""
+    import pyspark.sql.functions as F
+
+    eng = TierEngine(
+        spark, str(tmp_path / "tcf"), TIERS, "url", "ts", "value",
+        source_freq_seconds=600,
+    )
+    apply_out_of_order(eng, series_sdf)
+    store = eng.stores[name]
+    days = store.partitions()
+    assert max(len(store.files(d)) for d in days) > 1
+    before = gated_pdf(eng.read_tier(name))
+
+    several = [d for d in days if len(store.files(d)) > 1]
+    assert eng.compact(name, max_files_per_day=1) == several
+    for d in days:
+        assert len(store.files(d)) == 1
+    stored = store.read(spark).toPandas()
+    assert not stored.duplicated(["url", "window_end_s"]).any()
+    after = gated_pdf(eng.read_tier(name))
+    np.testing.assert_array_equal(after["n_vals"].values, before["n_vals"].values)
+    np.testing.assert_array_equal(
+        after["window_end_s"].values, before["window_end_s"].values
+    )
+    np.testing.assert_allclose(after["agg_mean"].values, before["agg_mean"].values, rtol=1e-12)
+    snap = store.read_manifest()["snapshots"][-1]
+    assert snap["partition_rows"] == {
+        d: len(stored[stored["window_day"] == d]) for d in days
+    }
+    assert eng.compact(name, max_files_per_day=1) == []
+    assert_tiers_equal_oneshot(eng, series_sdf)
+
+
 def test_snapshot_summary_matches_listing(spark, series_sdf, tmp_path):
-    """Each snapshot's summary — data files and bytes added, files swapped
-    out, staging and swap wall time — agrees with a directory listing of
-    the merged days taken before and after the batch."""
+    """Each snapshot's summary — data files and bytes added, files removed
+    (none: a batch appends), late rows dropped, staging and move wall
+    time — agrees with a directory listing of the tier taken before and
+    after the batch; every file listed before the batch is still there."""
     import pyspark.sql.functions as F
 
     eng = TierEngine(
@@ -347,23 +510,19 @@ def test_snapshot_summary_matches_listing(spark, series_sdf, tmp_path):
         for t in TIERS:
             store = eng.stores[t.name]
             snap = store.read_manifest()["snapshots"][-1]
-            days = snap["merged_partitions"]
-            in_days = lambda files: {  # noqa: E731
-                f: n for f, n in files.items()
-                if any(f"/window_day={d}/" in f for d in days)
-            }
-            added = in_days(listing(store))
+            after = listing(store)
+            assert before[t.name].items() <= after.items()
+            added = {f: n for f, n in after.items() if f not in before[t.name]}
+            assert {f.split("/window_day=")[1].split("/")[0] for f in added} == set(
+                snap["merged_partitions"]
+            )
             summary = snap["summary"]
             assert summary["added_files"] == len(added) > 0
             assert summary["added_bytes"] == sum(added.values())
-            assert summary["removed_files"] == len(in_days(before[t.name]))
-            assert summary["stage_s"] > 0 and summary["swap_s"] >= 0
+            assert summary["removed_files"] == 0
+            assert summary["late_dropped"] == 0
+            assert summary["stage_s"] > 0 and summary["move_s"] >= 0
             assert {k: m[t.name][k] for k in summary} == summary
-        # the second batch lands in live days and swaps their files out
-        assert b == 0 or all(
-            store.read_manifest()["snapshots"][-1]["summary"]["removed_files"] > 0
-            for store in eng.stores.values()
-        )
 
 
 def test_idempotent_reapply(spark, series_sdf, tmp_path):
@@ -457,12 +616,10 @@ def test_merge_is_partition_scoped(spark, series_sdf, tmp_path):
     assert sum(man["snapshots"][-1]["partition_rows"].values()) == man["snapshots"][-1]["rows"]
 
 
-def test_pending_intent_resume_no_double_merge(spark, series_sdf, tmp_path):
-    """Crash between intent record and swap: re-applying the same batch
-    must replay the staged swap, not recompute (which would double-merge
-    the delta into already-swapped days)."""
-    import pyspark.sql.functions as F
-
+def test_pending_intent_resume_no_double_merge(spark, series_sdf, tmp_path, monkeypatch):
+    """Crash between intent record and move: re-applying the same batch
+    must replay the staged move, not recompute (no partial pass) — the
+    batch is appended exactly once, so pcount exactly doubles."""
     eng = TierEngine(
         spark, str(tmp_path / "t6"), TIERS[:1], "url", "ts", "value",
         source_freq_seconds=600,
@@ -470,38 +627,27 @@ def test_pending_intent_resume_no_double_merge(spark, series_sdf, tmp_path):
     eng.apply_batch(series_sdf, batch_id="seed")
     want = gated_pdf(eng.read_tier("30m", gated=False))
 
-    # build the crash state by hand: stage batch2's merge + intent record,
-    # but no swap (simulates a kill after the manifest write)
+    # build the crash state by hand: stage the batch's partials and record
+    # the intent, but move nothing (a kill after the manifest write)
+    from diive_spark.plans.tiers import _footer_stats
+
     store = eng.stores["30m"]
-    tier = store.tier
-    delta = eng._partials(series_sdf, tier)
-    affected = sorted(r[0] for r in delta.select("window_day").distinct().collect())
     staging = store.root / "_staging_crash"
-    live_paths = [str(store.data_dir / f"window_day={d}") for d in affected]
-    touch = (
-        spark.read.option("basePath", str(store.data_dir)).parquet(*live_paths)
-        .withColumn("window_day", F.col("window_day").cast("string"))
+    eng._partials(series_sdf, store.tier).write.partitionBy("window_day").parquet(
+        str(staging)
     )
-    merged = (
-        touch.unionByName(delta)
-        .groupBy("url", "window_end_s", "window_day")
-        .agg(*[F.sum(c).alias(c) for c in ("psum", "pcount", "pslots")])
-    )
-    merged.repartition(F.col("window_day")).write.partitionBy("window_day").parquet(str(staging))
-    staged_rows = {
-        str(r["window_day"]): r["cnt"]
-        for r in spark.read.parquet(str(staging))
-        .withColumn("window_day", F.col("window_day").cast("string"))
-        .groupBy("window_day").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
     man = store.read_manifest()
     man.setdefault("pending", []).append(
-        {"batch_id": "crash", "affected_days": affected, "staged_rows": staged_rows}
+        {"batch_id": "crash", "seq": store.next_seq(man), **_footer_stats(staging)}
     )
     store.write_manifest(man)
 
     # resume: must finish from staging — pcount exactly doubles, no more
+    calls = []
+    monkeypatch.setattr(eng, "_partials", lambda *a: calls.append(a))
     eng.apply_batch(series_sdf, batch_id="crash")
+    assert calls == []
+    assert not staging.exists()
     got = gated_pdf(eng.read_tier("30m", gated=False))
     np.testing.assert_array_equal(got["n_vals"].values, want["n_vals"].values * 2)
     np.testing.assert_allclose(got["agg_sum"].values, want["agg_sum"].values * 2, rtol=1e-12)
@@ -511,39 +657,37 @@ def test_pending_intent_resume_no_double_merge(spark, series_sdf, tmp_path):
 
 
 def test_resume_sweeps_orphaned_trash(spark, series_sdf, tmp_path):
-    """Crash between the two os.replace calls of a day swap leaves a
-    _trash_{batch}_{day} dir with no staged day left; resume must sweep it
-    instead of accumulating trash across crash-resume cycles."""
+    """Crash between the two os.replace calls of a compaction's day swap
+    leaves a _trash_compact_{id}_{day} dir with no staged day left; the
+    replay must sweep it instead of accumulating trash across crash-resume
+    cycles."""
     eng = TierEngine(
         spark, str(tmp_path / "t7"), TIERS[:1], "url", "ts", "value",
         source_freq_seconds=600,
     )
     eng.apply_batch(series_sdf, batch_id="seed")
     store = eng.stores["30m"]
-    days = store.partitions()
-    day = days[0]
+    before = gated_pdf(eng.read_tier("30m"))
+    day = store.partitions()[0]
 
     # crash state: every staged day already swapped (empty staging dir),
-    # one day's trash dir orphaned, intent still pending
-    staging = store.root / "_staging_crash3"
+    # one day's trash dir orphaned, compaction intent still pending
+    staging = store.root / "_staging_compact_crash3"
     staging.mkdir()
-    orphan = store.root / f"_trash_crash3_{day}"
+    orphan = store.root / f"_trash_compact_crash3_{day}"
     orphan.mkdir()
     (orphan / "part-stale.parquet").write_bytes(b"stale")
     man = store.read_manifest()
-    man.setdefault("pending", []).append(
-        {
-            "batch_id": "crash3",
-            "affected_days": [day],
-            "staged_rows": {day: 0},
-        }
-    )
+    man["pending_compactions"] = [{"compact_id": "crash3", "days": [day]}]
     store.write_manifest(man)
 
-    eng.apply_batch(series_sdf, batch_id="crash3")
+    assert eng.compact("30m", max_files_per_day=10_000) == []
     assert not list(store.root.glob("_trash_*")), "orphaned trash must be swept"
+    assert not staging.exists()
     man = store.read_manifest()
-    assert man["pending"] == []
+    assert man["pending_compactions"] == []
+    assert [c["compact_id"] for c in man["compactions"]] == ["crash3"]
+    pd.testing.assert_frame_equal(gated_pdf(eng.read_tier("30m")), before)
 
 
 def test_streaming_late_data_converges(spark, series_sdf, tmp_path):
