@@ -11,6 +11,7 @@ LocalSD, QCF)."""
 from __future__ import annotations
 
 import importlib.machinery
+import os
 import re
 import sys
 import types
@@ -46,8 +47,11 @@ def _stub(name: str) -> types.ModuleType:
 
 
 def load_reference():
-    """Returns a namespace of reference functions, or None if the import
-    cannot converge (tests should skip)."""
+    """Returns a namespace of reference functions, or None if the checkout
+    is absent or the import cannot converge (tests should skip). Only
+    third-party dependencies are stubbed, never a ``diive`` module."""
+    if not os.path.isdir(os.path.join(REF, "diive")):
+        return None
     if REF not in sys.path:
         sys.path.insert(0, REF)
     for _ in range(200):
@@ -100,7 +104,10 @@ def load_reference():
                 daily_correlation=daily_correlation,
             )
         except ModuleNotFoundError as e:
-            _stub(str(e).split("'")[1])
+            missing = str(e).split("'")[1]
+            if missing.split(".")[0] == "diive":
+                return None  # incomplete checkout: never stub diive itself
+            _stub(missing)
         except ImportError as e:
             m = re.match(r"cannot import name '(\w+)' from '([\w.]+)'", str(e))
             if not m:

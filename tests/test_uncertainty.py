@@ -14,9 +14,9 @@ from diive_spark.operators.uncertainty import (
     cumulative_uncertainty,
     pas20_random_uncertainty,
 )
-from tests.reference_import import load_reference
+from tests import reference_import as ri
 
-REF = load_reference()
+REF = ri.load_reference()
 
 
 def _series(n_days: int = 20, seed: int = 7) -> pd.DataFrame:
@@ -48,18 +48,6 @@ def _series(n_days: int = 20, seed: int = 7) -> pd.DataFrame:
 @pytest.fixture(scope="module")
 def ladder(spark):
     pdf = _series()
-    ref_cls = REF.RandomUncertaintyPAS20
-    r = ref_cls(
-        df=pdf,
-        fluxcol="flux",
-        fluxgapfilledcol="gf",
-        tacol="ta",
-        vpdcol="vpd",
-        swincol="swin",
-    )
-    r._calc_random_uncertainty()  # methods 1-4 incl. expanding method 2
-    want = r.randunc_results
-
     sdf = spark.createDataFrame(
         pdf.reset_index(names="ts").assign(
             k=1,
@@ -82,19 +70,38 @@ def ladder(spark):
         .sort_values("slot_s")
         .reset_index(drop=True)
     )
-    return pdf, want, got, got_sdf
+    return pdf, got, got_sdf
 
 
-def test_method1_counts_and_stddev(ladder):
-    pdf, want, got, _ = ladder
+@pytest.fixture(scope="module")
+def want(ladder):
+    """The reference class's per-record results, on a copy of the input
+    so that it cannot mutate the frame the Spark ladder was built from."""
+    if REF is None:
+        pytest.skip(f"reference checkout {ri.REF} not present")
+    pdf = ladder[0]
+    r = REF.RandomUncertaintyPAS20(
+        df=pdf.copy(),
+        fluxcol="flux",
+        fluxgapfilledcol="gf",
+        tacol="ta",
+        vpdcol="vpd",
+        swincol="swin",
+    )
+    r._calc_random_uncertainty()  # methods 1-4 incl. expanding method 2
+    return r.randunc_results
+
+
+def test_method1_counts_and_stddev(ladder, want):
+    pdf, got, _ = ladder
     w = want["WINDOW_N_VALS_METHOD1"].to_numpy()
     g = got["n_method1"].to_numpy(dtype=float)
     measured = ~np.isnan(pdf["flux"].to_numpy())
     np.testing.assert_array_equal(g[measured], w[measured])
 
 
-def test_full_ladder_matches_reference(ladder):
-    _, want, got, _ = ladder
+def test_full_ladder_matches_reference(ladder, want):
+    _, got, _ = ladder
     w = want["flux_RANDUNC"].to_numpy(dtype=float)
     g = got["randunc"].to_numpy(dtype=float)
     assert np.isnan(w).sum() == np.isnan(g).sum()
@@ -102,12 +109,12 @@ def test_full_ladder_matches_reference(ladder):
 
 
 def test_ladder_fills_everything(ladder):
-    _, _, got, _ = ladder
+    _, got, _ = ladder
     assert got["randunc"].notna().all()
 
 
 def test_cumulative_propagation(ladder):
-    _, _, got, got_sdf = ladder
+    _, got, got_sdf = ladder
     cum = (
         cumulative_uncertainty(got_sdf, "k", "slot_s", "gf")
         .toPandas()
